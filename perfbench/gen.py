@@ -1,29 +1,17 @@
-"""Seeded load generator for the benchmark.
+"""Seeded load generator for the loader workload.
 
-Two kinds of input, both derived only from a seed and a few shape
-parameters, so the same seed always gives byte-identical inputs:
-
-- loader input: JSON-lines event files in the payload shape the loader
-  parses (``event_id, ts (epoch us), user_id, event_type, value, props``);
-- fixture tables: the ten parquet tables the query registry reads
-  (``region ... embeddings``), at a chosen scale factor.
-
-The system under test receives only the written files.  Run standalone
-to write a batch for inspection::
-
-    python3 perfbench/gen.py events OUT_DIR --seed 1 --events 100000
-    python3 perfbench/gen.py fixtures OUT_DIR --seed 1 --sf 0.01
+Writes JSON-lines event files in the payload shape the loader parses
+(``event_id, ts (epoch us), user_id, event_type, value, props``).  The
+events are derived only from the seed and the shape parameters (event
+count, hour spread, late share, key skew), so the same seed always gives
+byte-identical files.  The system under test receives only the files.
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 HOUR_US = 3_600_000_000
 USERS = 100_000
@@ -88,159 +76,3 @@ def write_backfill(dir_: str, seed: int, n: int, files: int, hours: int) -> np.n
                      min(n, (f + 1) * per) - f * per, newest_hour=hours - 1, hours=hours,
                      late_share=1.0)
         for f in range(files)])
-
-
-# ---------------------------------------------------------------- fixtures
-
-_WORDS = (
-    "a the data table row column key value scan join sort merge hash group "
-    "filter order query stream batch window spark part line customer agg "
-    "fast slow big small vector index block page cache"
-).split()
-_LANGS = np.array(["en", "en", "en", "de", "fr", "es", "zh"])
-
-
-def _text(rng: np.random.Generator, lo: int, hi: int) -> str:
-    return " ".join(rng.choice(_WORDS, rng.integers(lo, hi)).tolist())
-
-
-def fixture_tables(seed: int, sf: float) -> dict[str, pa.Table]:
-    """The registry's ten fixture tables at scale ``sf`` (sf0.01: 60k
-    lineitem rows), with the schemas and value domains the operators
-    and their DuckDB oracles are written against."""
-    rng = np.random.default_rng(seed)
-    n_supp, n_cust, n_part = int(10_000 * sf), int(150_000 * sf), int(200_000 * sf)
-    n_ord, n_ev = int(1_500_000 * sf), int(1_000_000 * sf)
-    n_docs, n_emb = max(500, int(50_000 * sf)), max(500, int(20_000 * sf))
-    money = lambda lo, hi, n: rng.integers(lo * 100, hi * 100, n) / 100  # noqa: E731
-    t: dict[str, pa.Table] = {}
-    t["region"] = pa.table({
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"],
-    })
-    t["nation"] = pa.table({
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-    })
-    t["supplier"] = pa.table({
-        "s_suppkey": np.arange(n_supp, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": rng.integers(0, 25, n_supp).astype(np.int32),
-        "s_acctbal": money(-999, 9999, n_supp),
-    })
-    t["customer"] = pa.table({
-        "c_custkey": np.arange(n_cust, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": rng.integers(0, 25, n_cust).astype(np.int32),
-        "c_acctbal": money(-999, 9999, n_cust),
-        "c_mktsegment": rng.choice(
-            ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"], n_cust),
-    })
-    colors = ["red", "blue", "green", "small", "large", "black", "white"]
-    things = ["widget", "bolt", "ring", "gear", "valve", "spring"]
-    t["part"] = pa.table({
-        "p_partkey": np.arange(n_part, dtype=np.int64),
-        "p_name": [f"{colors[a]} {things[b]}" for a, b in zip(
-            rng.integers(0, len(colors), n_part), rng.integers(0, len(things), n_part))],
-        "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, n_part)],
-        "p_type": rng.choice(["ECONOMY", "STANDARD", "LARGE", "PROMO", "SMALL", "MEDIUM"],
-                             n_part),
-        "p_size": rng.integers(1, 51, n_part).astype(np.int32),
-        "p_retailprice": (90_000 + np.arange(n_part) % 1000 * 10) / 100,
-    })
-    day_ms = 86_400_000
-    first_day = 9131  # 1995-01-01 in days since the epoch
-    odate = (first_day + rng.integers(0, 2404, n_ord)) * day_ms
-    t["orders"] = pa.table({
-        "o_orderkey": np.arange(n_ord, dtype=np.int64),
-        "o_custkey": rng.integers(0, n_cust, n_ord),
-        "o_orderstatus": rng.choice(["F", "O", "P"], n_ord),
-        "o_totalprice": money(1000, 500_000, n_ord),
-        "o_orderdate": pa.array(odate, pa.timestamp("ms")),
-        "o_orderpriority": rng.choice(
-            ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"], n_ord),
-    })
-    lines = rng.integers(1, 8, n_ord)
-    okey = np.repeat(np.arange(n_ord), lines)
-    n_li = len(okey)
-    lnum = np.arange(n_li) - np.repeat(np.cumsum(lines) - lines, lines) + 1
-    qty = rng.integers(1, 51, n_li).astype(np.float64)
-    t["lineitem"] = pa.table({
-        "l_orderkey": okey.astype(np.int64),
-        "l_partkey": rng.integers(0, n_part, n_li),
-        "l_suppkey": rng.integers(0, n_supp, n_li),
-        "l_linenumber": lnum.astype(np.int32),
-        "l_quantity": qty,
-        "l_extendedprice": money(900, 105_000, n_li),
-        "l_discount": rng.integers(0, 11, n_li) / 100,
-        "l_tax": rng.integers(0, 9, n_li) / 100,
-        "l_returnflag": rng.choice(["A", "N", "R"], n_li),
-        "l_linestatus": rng.choice(["F", "O"], n_li),
-        "l_shipdate": pa.array(np.repeat(odate, lines)
-                               + rng.integers(1, 122, n_li) * day_ms, pa.timestamp("ms")),
-    })
-    ev_gap = np.cumsum(rng.integers(1, 2 * 30 * 86_400_000_000 // max(n_ev, 1), n_ev))
-    t["events"] = pa.table({
-        "event_id": np.arange(n_ev, dtype=np.int64),
-        "ts": pa.array(EPOCH_US + ev_gap, pa.timestamp("us")),
-        "user_id": rng.integers(0, int(15_000 * sf), n_ev),
-        "event_type": EVENT_TYPES[rng.integers(0, 5, n_ev)],
-        "value": money(0, 490, n_ev) + 0.01,
-        "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, n_ev)],
-    })
-    # Documents: word salad, with groups sharing a long prefix so the
-    # near-duplicate operators have something to find.
-    texts = []
-    for i in range(n_docs):
-        if i % 20 == 19:
-            texts.append(texts[i - 1 - int(rng.integers(0, 5))][:40] + " " + _text(rng, 5, 40))
-        else:
-            texts.append(_text(rng, 8, 90))
-    t["documents"] = pa.table({
-        "doc_id": np.arange(n_docs, dtype=np.int64),
-        "text": texts,
-        "lang": _LANGS[rng.integers(0, len(_LANGS), n_docs)],
-        "source": [f"src{i % 20}" for i in range(n_docs)],
-        "n_chars": np.array([len(x) for x in texts], dtype=np.int64),
-    })
-    # Embeddings: ten label clusters in 64 dimensions.
-    labels = rng.integers(0, 10, n_emb)
-    centers = rng.normal(0, 0.15, (10, 64))
-    vecs = (centers[labels] + rng.normal(0, 0.08, (n_emb, 64))).astype(np.float32)
-    t["embeddings"] = pa.table({
-        "vec_id": np.arange(n_emb, dtype=np.int64),
-        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": labels.astype(np.int32),
-    })
-    return t
-
-
-def write_fixtures(dir_: str, seed: int, sf: float) -> dict[str, int]:
-    """Write every fixture table as ``dir_/<name>.parquet``; returns row counts."""
-    os.makedirs(dir_, exist_ok=True)
-    counts = {}
-    for name, tbl in fixture_tables(seed, sf).items():
-        pq.write_table(tbl, os.path.join(dir_, f"{name}.parquet"))
-        counts[name] = tbl.num_rows
-    return counts
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("kind", choices=("events", "fixtures"))
-    ap.add_argument("out")
-    ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--events", type=int, default=100_000)
-    ap.add_argument("--files", type=int, default=8)
-    ap.add_argument("--hours", type=int, default=168)
-    ap.add_argument("--sf", type=float, default=0.01)
-    a = ap.parse_args()
-    if a.kind == "events":
-        write_backfill(a.out, a.seed, a.events, a.files, a.hours)
-    else:
-        print(write_fixtures(a.out, a.seed, a.sf))
-
-
-if __name__ == "__main__":
-    main()

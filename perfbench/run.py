@@ -84,7 +84,7 @@ def stop_spark(spark) -> None:
 
 
 def run(args, work: str, spec: dict) -> dict:
-    from workloads import WORKLOADS, tail
+    from workloads import WORKLOADS
 
     ctx = Context(args, work)
     wl = WORKLOADS[args.workload](ctx)
@@ -114,8 +114,11 @@ def run(args, work: str, spec: dict) -> dict:
     finally:
         stop_spark(ctx.spark)
 
-    cold, units, reads = wl.results()
-    tail_s, tail_pct = tail(units)
+    cold, units, tails, reads = wl.results()
+    # The upper quartile: with 12-16 samples a run has no percentile with
+    # ten samples beyond it, and the maximum is one sample, which made
+    # run_tail_s the noisiest metric across seeds.
+    tail_s = statistics.quantiles(tails, n=4)[2]
     print(f"perfbench: {args.workload} gen {gen_s:.1f}s setup {setup_s:.1f}s"
           f" measure+check {time.perf_counter() - T0 - gen_s - setup_s:.1f}s"
           f" cold {cold:.2f}s units {[round(u, 3) for u in units]}"
@@ -137,7 +140,7 @@ def run(args, work: str, spec: dict) -> dict:
                 "operators." + name.rsplit(".", 1)[1])
             key = f"self.{layer}_s"
             values[key] = values.get(key, 0.0) + secs / len(units)
-        values.update({"run_tail.pct": tail_pct, "run_tail.n": len(units),
+        values.update({"run_tail.n": len(tails),
                        "trace.run_p50_s": statistics.median(units),
                        "trace.spans": len(tr.spans)})
         os.makedirs(os.path.join(ROOT, ".perfbench", "traces"), exist_ok=True)

@@ -60,6 +60,15 @@ class Tracer:
             self._stack.pop()
             s.end = time.perf_counter()
 
+    @contextmanager
+    def paused(self):
+        """Record no spans inside the block."""
+        was, self.enabled = self.enabled, False
+        try:
+            yield
+        finally:
+            self.enabled = was
+
     def wrap(self, name: str, fn):
         @functools.wraps(fn)
         def traced(*args, **kwargs):

@@ -4,7 +4,7 @@ Each workload is a single client in a closed loop: it issues the next
 loader run or query only after the previous one returned.  ``run.py``
 drives three phases:
 
-- ``prepare``: write the seeded inputs (never timed);
+- ``prepare``: write the seeded loader inputs (never timed);
 - ``measure``: a cold phase (the first full pass over the input, as a
   fresh process pays it), then a window of repeated units of work, then
   untimed correctness checks;
@@ -30,12 +30,16 @@ HOURS = 168  # one week of hour partitions
 # Per step of the trickle: one hourly file, most events in the newest
 # hour, a share up to a day late.
 STEP_EVENTS, STEP_LATE, STEP_LATE_HOURS = 500, 0.2, 24
-# The first read-back round after the loads runs about twice as slow as
-# the rest; five rounds keep the median clear of it.
-READ_ROUNDS = 5
+# A timed read-back round follows every fourth timed step.
+READ_EVERY = 4
+# Untimed incremental runs (and one read-back round) between the cold
+# backfill and the window: the first runs against the new checkpoint are
+# up to twice as slow as later ones while the JVM warms up, and would
+# otherwise set run_tail_s and pull run_p50_s with them.
+WARM_STEPS = 4
 # The file-sink and file-source logs compact every 10 batches; the cold
-# load is batch 0, so 12 incremental runs always include the compaction
-# at batch 9 whatever the machine's speed.
+# load is batch 0 and the warm-up batches 1-4, so 12 timed runs always
+# include the compaction at batch 9 whatever the machine's speed.
 MIN_STEPS = 12
 
 # ``operator_mix``: bench.py's headline query of each operator module, so
@@ -55,7 +59,14 @@ MIX_QUERIES = (
     "pca_power_component",      # ml
     "multimodal_audio_energy",  # multimodal (Arrow UDF tier)
 )
-MIX_SF = 0.01  # the scale the DuckDB oracles finish at
+# Each query's timed run follows its cold run by this many queries; the
+# first cold queries pay the JVM's warm-up, so the timed runs start after
+# them.
+MIX_LAG = 4
+# The repo's documented fixtures at sf0.01 (TESTDATA.md), copied into the
+# benchmark so it reads nothing outside its checkout.  sf0.01 is the scale
+# the DuckDB oracles finish at.
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "sf0.01")
 
 
 class Ledger:
@@ -89,16 +100,6 @@ class Window:
         self.last = time.perf_counter() - start
 
 
-def tail(xs: list[float]) -> tuple[float, float]:
-    """(value, percentile) of the highest percentile with at least ten
-    samples beyond it; the maximum when there are fewer than 20 samples
-    (below that such a percentile would not lie above the median)."""
-    s = sorted(xs)
-    if len(s) < 20:
-        return s[-1], 100.0
-    return s[-11], 100.0 * (len(s) - 10) / len(s)
-
-
 def _fs_stats(root: str) -> tuple[int, int]:
     files = size = 0
     for d, _, names in os.walk(root):
@@ -110,14 +111,16 @@ def _fs_stats(root: str) -> tuple[int, int]:
 
 class BackfillTrickle:
     """``streaming.loader`` end to end.  Cold phase: one ``run_loader``
-    backfills a week of events into an empty table and checkpoint (per-row
-    cost: parse, transform, partitioned write).  Window: hourly incremental
-    runs of ~500 events each against the same table and checkpoint
-    (per-run fixed cost: preflight, query start, listing, offset and
-    commit logs, one file per touched partition).  Then read-back rounds
-    over ``read_loaded``."""
+    backfills a week of events into an empty table and checkpoint (the
+    first streaming query of the process, writing one file per task and
+    hour partition).  Then ``WARM_STEPS`` untimed hourly incremental runs
+    and one read-back round.  Window: more hourly incremental runs of ~500
+    events each against the same table and checkpoint (per-run fixed
+    cost: preflight, query start, listing, offset and commit logs, one
+    file per touched partition), with a read-back round over
+    ``read_loaded`` after every ``READ_EVERY`` of them."""
 
-    BASE, FILES = 150_000, 8
+    BASE, FILES = 150_000, 40
 
     def __init__(self, ctx) -> None:
         self.ctx = ctx
@@ -158,9 +161,16 @@ class BackfillTrickle:
                          f"run wrote {res['rows_written']} rows, expected {expect}")
         return wall, ctx.progress.take() if ctx.progress else []
 
-    def _readback(self) -> None:
+    def _step(self, step: int) -> tuple[float, list[dict]]:
+        """Write the next hourly file and load it incrementally."""
+        self._count(gen.write_events(
+            os.path.join(self.in_dir, f"step-{step:05d}.json"), self.ctx.seed,
+            self.total, STEP_EVENTS, HOURS + step, STEP_LATE_HOURS, STEP_LATE))
+        return self._load(STEP_EVENTS)
+
+    def _readback(self) -> tuple[float, float]:
         """One read-back round: a full ``d,h`` rollup, then a one-hour
-        query that prunes to a single partition."""
+        query that prunes to a single partition; returns their times."""
         from pyspark.sql import functions as F
 
         from kafka_hadoop_loader_spark.streaming import loader
@@ -175,31 +185,36 @@ class BackfillTrickle:
                .where((F.col("d") == d) & (F.col("h") == h))
                .agg(F.count("*").alias("n")).collect()[0]["n"])
         t2 = time.perf_counter()
-        self.scan_s.append(t1 - t0)
-        self.hour_s.append(t2 - t1)
-        self.reads.append(t2 - t0)
         n = sum(r["count"] for r in rollup)
         self.ctx.ledger.check(n == self.total, f"rollup sums to {n}, expected {self.total}")
         self.ctx.ledger.check(one == self.hour_counts[hour],
                               f"hour {d} {h} has {one} rows, expected {self.hour_counts[hour]}")
+        return t1 - t0, t2 - t1
 
     def measure(self) -> None:
         self.cold, self.cold_batches = self._load(self.BASE)
+        for step in range(WARM_STEPS):
+            self._step(step)
+        self._readback()
         self.mark = len(self.ctx.tracer.spans)
         win = Window(self.ctx.seconds)
-        step = 0
-        while win.more() or step < MIN_STEPS:
-            self._count(gen.write_events(
-                os.path.join(self.in_dir, f"step-{step:05d}.json"), self.ctx.seed,
-                self.total, STEP_EVENTS, HOURS + step, STEP_LATE_HOURS, STEP_LATE))
+        step = WARM_STEPS
+        # Read-backs are interleaved with the steps, not run after them, so
+        # the samples of both spread over the whole window: the host's speed
+        # drifts over tens of seconds, and a metric sampled in one short
+        # stretch measures that drift.
+        while win.more() or len(self.loads) < MIN_STEPS:
             t = time.perf_counter()
-            wall, batches = self._load(STEP_EVENTS)
-            win.timed(t)
+            wall, batches = self._step(step)
             self.loads.append(wall)
             self.run_batches.append(batches)
             step += 1
-        for _ in range(READ_ROUNDS):
-            self._readback()
+            if len(self.loads) % READ_EVERY == 0:
+                scan, hour = self._readback()
+                self.scan_s.append(scan)
+                self.hour_s.append(hour)
+                self.reads.append(scan + hour)
+            win.timed(t)
         self.verify_table()
 
     def verify_table(self) -> None:
@@ -211,11 +226,12 @@ class BackfillTrickle:
 
         from kafka_hadoop_loader_spark.streaming.loader import read_loaded
 
-        df = read_loaded(self.ctx.spark, self.target)
-        eid = F.get_json_object("payload", "$.event_id").cast("long")
-        hour = F.expr(f"cast(get_json_object(payload, '$.ts') as long) div {gen.HOUR_US}")
+        df = (read_loaded(self.ctx.spark, self.target)
+              .select("d", "h", F.json_tuple("payload", "event_id", "ts").alias("eid", "ts")))
+        hour = F.expr(f"cast(ts as long) div {gen.HOUR_US}")
         groups = (df.groupBy("d", "h", hour.alias("hr"))
-                  .agg(F.count("*").alias("n"), F.countDistinct(eid).alias("ids")).collect())
+                  .agg(F.count("*").alias("n"), F.countDistinct(F.col("eid").cast("long"))
+                       .alias("ids")).collect())
         led = self.ctx.ledger
         n = sum(g["n"] for g in groups)
         led.check(n == self.total, f"{n} rows loaded, {self.total} generated")
@@ -232,8 +248,9 @@ class BackfillTrickle:
         want = {first + h: int(c) for h, c in enumerate(self.hour_counts) if c}
         led.check(got == want, "per-hour counts differ from the generator's")
 
-    def results(self) -> tuple[float, list[float], list[float]]:
-        return self.cold, self.loads, self.reads
+    def results(self) -> tuple[float, list[float], list[float], list[float]]:
+        """(cold, units, tail samples, reads): see ``OperatorMix.results``."""
+        return self.cold, self.loads, self.loads, self.reads
 
     def layer_metrics(self) -> dict[str, float]:
         """Per-layer numbers from the spans, the progress listener and the
@@ -292,12 +309,18 @@ def value_hash(rows, cols) -> str:
 class OperatorMix:
     """The registry's analytics surface; the loader is never called.
     Cold phase: one pass that collects every output (checked against the
-    DuckDB oracle afterwards) and builds the memoised indexes.  Window:
-    passes through the ``noop`` sink."""
+    DuckDB oracle afterwards) and builds the memoised indexes.  Timed:
+    passes through the ``noop`` sink.  The first timed pass is interleaved
+    with the cold one, each query's timed run ``MIX_LAG`` queries after
+    its cold run, so that its samples spread over the whole cold phase:
+    the host's speed drifts over tens of seconds, and a pass timed in one
+    ~16 s stretch measured that drift (IQR/median 0.28 over ten seeds on
+    a 4-core VM, against 0.11 for the ~35 s cold pass).  Further passes,
+    while the window lasts, run back to back."""
 
     def __init__(self, ctx) -> None:
         self.ctx = ctx
-        self.fx = os.path.join(ctx.work, "fixtures")
+        self.fx = FIXTURES
         self.cold = 0.0
         self.passes: list[float] = []
         self.queries: list[float] = []
@@ -306,56 +329,72 @@ class OperatorMix:
         self.mark = 0
 
     def prepare(self) -> None:
-        gen.write_fixtures(self.fx, self.ctx.seed, MIX_SF)
+        """The inputs are the fixed fixture files; the seed does not change them."""
+
+    def _cold(self, name: str) -> None:
+        """Collect one query's output, untraced; adds its time to ``cold``."""
+        t = time.perf_counter()
+        try:
+            with self.ctx.tracer.paused():
+                df = self.ctx.registry[name].fn(self.ctx.spark, self.fx)
+                self.outputs[name] = (df.columns, [tuple(r) for r in df.collect()])
+        except Exception:  # counted by verify(), not fatal
+            traceback.print_exc()
+        self.cold += time.perf_counter() - t
+
+    def _timed(self, name: str, mods: dict[str, dict[str, float]]) -> float:
+        """One query through the ``noop`` sink; returns its wall time."""
+        ctx = self.ctx
+        sc = ctx.spark.sparkContext
+        q = ctx.registry[name]
+        mod = q.fn.__module__.rsplit(".", 1)[-1]
+        group = f"perfbench-{name}-{len(self.passes)}"
+        if ctx.tracer.enabled:
+            sc.setJobGroup(group, name)
+        t0 = time.perf_counter()
+        ok = True
+        try:
+            with ctx.tracer.span(f"operators.{mod}.build"):
+                df = q.fn(ctx.spark, self.fx)
+            t1 = time.perf_counter()
+            with ctx.tracer.span(f"operators.{mod}.exec"):
+                df.write.format("noop").mode("overwrite").save()
+        except Exception:  # counted as a failed operation
+            traceback.print_exc()
+            t1, ok = time.perf_counter(), False
+        t2 = time.perf_counter()
+        ctx.ledger.check(ok, f"{name} raised")
+        self.queries.append(t2 - t0)
+        if ctx.tracer.enabled:
+            jobs, tasks, failed = job_counts(sc, group)
+            mods[mod] = {"build_s": t1 - t0, "exec_s": t2 - t1, "jobs": jobs,
+                         "tasks": tasks, "failed_tasks": failed}
+        return t2 - t0
 
     def measure(self) -> None:
-        ctx = self.ctx
-        t = time.perf_counter()
-        for name in MIX_QUERIES:
-            try:
-                df = ctx.registry[name].fn(ctx.spark, self.fx)
-                self.outputs[name] = (df.columns, [tuple(r) for r in df.collect()])
-            except Exception:  # counted by verify(), not fatal
-                traceback.print_exc()
-        self.cold = time.perf_counter() - t
-        self.mark = len(ctx.tracer.spans)
-        sc = ctx.spark.sparkContext
-        win = Window(ctx.seconds)
-        while not self.passes or win.more():
-            mods: dict[str, dict[str, float]] = {}
-            t_pass = time.perf_counter()
+        self.mark = len(self.ctx.tracer.spans)
+        win = Window(self.ctx.seconds)
+        n, mods, t_pass = len(MIX_QUERIES), {}, 0.0
+        for i in range(n + MIX_LAG):
+            if i < n:
+                self._cold(MIX_QUERIES[i])
+            if i >= MIX_LAG:
+                t_pass += self._timed(MIX_QUERIES[i - MIX_LAG], mods)
+        self.passes.append(t_pass)
+        self.per_module.append(mods)
+        win.last = t_pass
+        while win.more():
+            mods, t = {}, time.perf_counter()
             for name in MIX_QUERIES:
-                q = ctx.registry[name]
-                mod = q.fn.__module__.rsplit(".", 1)[-1]
-                group = f"perfbench-{name}-{len(self.passes)}"
-                if ctx.tracer.enabled:
-                    sc.setJobGroup(group, name)
-                t0 = time.perf_counter()
-                ok = True
-                try:
-                    with ctx.tracer.span(f"operators.{mod}.build"):
-                        df = q.fn(ctx.spark, self.fx)
-                    t1 = time.perf_counter()
-                    with ctx.tracer.span(f"operators.{mod}.exec"):
-                        df.write.format("noop").mode("overwrite").save()
-                except Exception:  # counted as a failed operation
-                    traceback.print_exc()
-                    t1, ok = time.perf_counter(), False
-                t2 = time.perf_counter()
-                ctx.ledger.check(ok, f"{name} raised")
-                self.queries.append(t2 - t0)
-                if ctx.tracer.enabled:
-                    jobs, tasks, failed = job_counts(sc, group)
-                    mods[mod] = {"build_s": t1 - t0, "exec_s": t2 - t1, "jobs": jobs,
-                                 "tasks": tasks, "failed_tasks": failed}
-            self.passes.append(time.perf_counter() - t_pass)
-            win.timed(t_pass)
+                self._timed(name, mods)
+            self.passes.append(time.perf_counter() - t)
+            win.timed(t)
             self.per_module.append(mods)
         self.verify()
 
     def verify(self) -> None:
         """Untimed: every cold-pass output against the registry's DuckDB
-        oracle over the same generated fixtures (rows > 0 where a query
+        oracle over the same fixtures (rows > 0 where a query
         has no oracle)."""
         import duckdb
 
@@ -383,8 +422,12 @@ class OperatorMix:
                 f"{name}: output differs from the oracle ({len(rows)} vs {len(orows)} rows)")
         con.close()
 
-    def results(self) -> tuple[float, list[float], list[float]]:
-        return self.cold, self.passes, self.queries
+    def results(self) -> tuple[float, list[float], list[float], list[float]]:
+        """(cold, units, tail samples, reads).  One pass takes longer than
+        the window, so the tail is taken over single-query latencies, not
+        over passes: a regression of one query shows there even when the
+        pass total hides it."""
+        return self.cold, self.passes, self.queries, self.queries
 
     def layer_metrics(self) -> dict[str, float]:
         """Per module: medians over the timed passes."""
