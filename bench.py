@@ -129,6 +129,7 @@ def main() -> None:
                     pass1[name] = dt
             except Exception as e:  # noqa: BLE001
                 times[name] = -1.0
+                pass1[name] = -1.0
                 print(
                     f"BENCH ERROR {name}: {type(e).__name__}: {str(e)[:200]}",
                     file=sys.stderr,

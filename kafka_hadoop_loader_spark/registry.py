@@ -71,8 +71,8 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # and therefore always sorts to the front — the round-1..7 "new ops
 # first" behavior falls out as a special case.
 #
-# The tuple below is the round-14 window: the 50 stalest names —
-# the 14 round-7 names plus 36 round-8 names
+# The tuple below is the round-15 window: the 50 stalest names —
+# the 14 round-8 names plus 36 round-9 names
 # (latest driver-green round ascending, name ascending).
 # tests/test_driver_window.py recomputes this ordering from the
 # committed CORRECTNESS_r*.json artifacts and fails if the tuple
@@ -80,58 +80,58 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # round's artifact.  Pure presentation order — names, fns, and oracles
 # are unchanged.
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # -- latest driver green: round 7 (14 names, name order) --
-    "orders_segment_migration",
-    "pipeline_corpus_build",
-    "privacy_release_gate",
-    "retrieval_mrr_audit",
-    "sample_importance_reweight",
-    "scan_binary_files",
-    "stats_theil_sen",
-    "t_closeness_audit",
-    "text_langid_confusion",
-    "text_ngram_novelty",
-    "ts_anomaly_seasonal",
-    "ts_decompose_classical",
-    "window_range_trailing",
-    "window_rolling_median",
-    # -- latest driver green: round 8 (36 names, name order) --
-    "decontaminate_ngram",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_keep_first",
-    "dedup_minhash_lsh",
-    "dedup_near_prefix",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "doc_fingerprint",
-    "embedding_label_centroid_dist",
-    "embedding_norms",
-    "events_hourly",
-    "filter_in_like",
-    "filter_pushdown",
-    "fn_array",
-    "fn_datetime",
-    "fn_json",
-    "fn_map",
-    "fn_math",
-    "fn_string",
-    "join_anti",
-    "join_asof",
-    "join_broadcast",
-    "join_bucketed_colocated",
-    "join_cross",
-    "join_full_outer",
-    "join_inner",
-    "join_left_outer",
-    "join_range",
-    "join_right_outer",
-    "join_semi",
-    "knn_cosine_bruteforce",
-    "knn_cosine_ivf",
-    "knn_cosine_lsh",
-    "mix_weighted_sources",
-    "multimodal_decode",
+    # -- latest driver green: round 8 (14 names, name order) --
+    "multimodal_frame_sample",
+    "multimodal_meta",
+    "pii_redact",
+    "project_expr",
+    "quality_gate",
+    "sample_hash_split",
+    "set_except",
+    "set_except_all",
+    "set_intersect",
+    "set_intersect_all",
+    "set_union_all",
+    "set_union_distinct",
+    "sort_multi_limit",
+    "sort_nulls_order",
+    # -- latest driver green: round 9 (36 names, name order) --
+    "anomaly_rolling_z",
+    "compact_small_files",
+    "cooccur_pmi",
+    "corr_matrix",
+    "dedup_edit_distance",
+    "dedup_incremental_batch",
+    "dedup_segments",
+    "events_funnel",
+    "events_retention",
+    "graph_bfs_hops",
+    "graph_pagerank",
+    "inverted_index",
+    "join_asof_tolerance",
+    "join_null_safe",
+    "join_salted_skew",
+    "keyword_search",
+    "kmeans_embeddings",
+    "knn_cosine_blocked",
+    "pack_sequences",
+    "quantiles_exact",
+    "reference_loader_parity",
+    "regr_by_group",
+    "text_lang_id",
+    "text_lang_stats",
+    "text_quality",
+    "text_repetition",
+    "text_tfidf",
+    "text_token_freq",
+    "tpch_q10_returns",
+    "tpch_q12_ship_delay",
+    "tpch_q13_cust_distribution",
+    "tpch_q14_promo_share",
+    "tpch_q16_supplier_cnt",
+    "tpch_q17_small_quantity",
+    "tpch_q22_idle_rich",
+    "tpch_q3_shipping",
 )
 
 

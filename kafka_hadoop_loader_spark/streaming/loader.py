@@ -25,11 +25,21 @@ Sources are pluggable (R5's deserializer hook, generalized):
 - "files": JSON-lines directory stream standing in for a topic; each
   file plays the role of a batch of Kafka messages.
 
-Scale notes: one streaming micro-batch is a normal Spark job — the
-partitioned write shuffles nothing (dynamic partition overwrite off,
-append only); with maxFilesPerTrigger/maxOffsetsPerTrigger the loader
-backfills unbounded history in bounded-memory increments.  The d=/h=
-layout is what makes every downstream query partition-prunable.
+Scale notes: one streaming micro-batch is a normal Spark job (append
+only, dynamic partition overwrite off).  Before the write, the output
+is repartitioned on its partition columns, so each partition value
+goes to exactly one writer task and a batch writes one file per
+partition per batch.  Without the shuffle, every input task would
+write its own file into every hour it touches: many small files, a
+larger sink log, and more files for every reader to list and open.
+The shuffle's width is the session's core count, not
+``spark.sql.shuffle.partitions``: adaptive execution does not coalesce
+inside streaming micro-batches, so a small incremental run would
+otherwise schedule every empty reduce task.  The trade-off is skew:
+one hot hour is written by a single task.  With
+maxFilesPerTrigger/maxOffsetsPerTrigger the loader backfills unbounded
+history in bounded-memory increments.  The d=/h= layout is what makes
+every downstream query partition-prunable.
 """
 
 from __future__ import annotations
@@ -177,13 +187,11 @@ def transform(cfg: LoaderConfig, raw: DataFrame) -> DataFrame:
     """R5/R6/R7: parse payload, extract event time, derive d/h buckets."""
     parsed = raw.withColumn("rec", F.from_json("payload", cfg.payload_schema))
     ts_raw = F.col("rec").getField(cfg.timestamp_field).cast("bigint")
-    divisor = {"s": 1, "ms": 1, "us": 1}[cfg.timestamp_unit]
     to_ts = {
         "s": lambda c: F.timestamp_seconds(c),
         "ms": lambda c: F.timestamp_millis(c),
         "us": lambda c: F.timestamp_micros(c),
     }[cfg.timestamp_unit]
-    _ = divisor
     ts = to_ts(ts_raw)
     return parsed.select(
         "topic",
@@ -386,6 +394,10 @@ def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
         out = out.select(
             F.col("payload").alias("value"), "d", "h", *cfg.extra_partition_cols
         )
+    # one writer task per partition value: one file per hour per batch
+    out = out.repartition(
+        spark.sparkContext.defaultParallelism, "d", "h", *cfg.extra_partition_cols
+    )
     listener = _RunMetricsListener()
     spark.streams.addListener(listener)
     try:

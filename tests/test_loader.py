@@ -106,6 +106,48 @@ def test_partition_pruning_on_loaded_data(spark, loader_dirs):
     assert "PartitionFilters" in plan
 
 
+def test_one_file_per_hour_partition_per_batch(spark, loader_dirs):
+    """The write is repartitioned on d/h: however many input tasks read
+    the batch, each hour directory receives exactly one file."""
+    import glob
+
+    cfg = LoaderConfig(
+        input_path=loader_dirs["input"],
+        target_path=loader_dirs["target"],
+        checkpoint_path=loader_dirs["checkpoint"],
+    )
+    for k in range(3):  # each file spans h=00 and h=01
+        _write_jsonl(
+            f"{loader_dirs['input']}/part{k}.jsonl", _mk_events(1000 * k, 120, BASE_US)
+        )
+    # tiny splits so the batch is read by several input tasks
+    confs = {
+        "spark.sql.files.openCostInBytes": "1",
+        "spark.sql.files.maxPartitionBytes": "2k",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        res = run_loader(spark, cfg)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    hour_dirs = sorted(glob.glob(os.path.join(cfg.target_path, "d=*", "h=*")))
+    assert [os.path.relpath(h, cfg.target_path) for h in hour_dirs] == [
+        "d=2024-01-01/h=00",
+        "d=2024-01-01/h=01",
+    ]
+    for h in hour_dirs:
+        assert len(glob.glob(os.path.join(h, "*.parquet"))) == 1, os.listdir(h)
+    assert res["rows_written"] == 360
+    assert read_loaded(spark, cfg.target_path).count() == 360
+
+
 def test_cli_end_to_end_incremental(spark, tmp_path):
     """R10 parity: the CLI runs a bounded load; a second invocation with
     the same checkpoint loads only newly-arrived files (R2/R9)."""

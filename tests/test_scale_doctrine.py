@@ -42,7 +42,7 @@ COLLECT_ALLOWED = {
 # (file, first identifier of the argument).  Every entry must be a
 # bounded frame; review before extending.
 CROSSJOIN_ALLOWED = {
-    "operators/dedup.py": {"nv": 1, "nt": 1},    # 1-row count aggregates
+    "operators/dedup.py": {"nt": 1},             # 1-row count aggregate
     "operators/graph.py": {"extra": 1},          # 1-row count aggregate
     "operators/joins.py": {"n": 1},              # join_cross demo: region x nation
     "operators/similarity.py": {"c": 3},         # corpus side; the LEFT is the
