@@ -38,8 +38,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # (sf_dir, name) -> parquet schema.  Reading without a declared schema
 # runs a footer-inference Spark job at PLAN BUILD time — one per table

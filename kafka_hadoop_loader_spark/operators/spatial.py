@@ -136,7 +136,6 @@ def spatial_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Geohash --------------------------------------------------------------
 _GH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
-_GH_BITS = 25  # 5 base32 chars: 13 longitude bits, 12 latitude bits
 
 
 def _geohash_bits(div: str) -> str:

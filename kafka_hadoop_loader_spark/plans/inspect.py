@@ -34,13 +34,6 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def executed_plan(df: DataFrame) -> str:
-    """The AQE-final physical plan (after execution; run an action first
-    or this shows the initial plan).  ``*(N)`` prefixes mark
-    whole-stage-codegen stages."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """The PushedFilters lists of every scan in the plan (flattened)."""
     out: list[str] = []

@@ -126,11 +126,11 @@ def two_phase_rank(
     ``prefix_sum=(name, col)`` — inclusive running sum of ``col``;
     ``checkpoint_input`` — lazily ``localCheckpoint`` ``df`` first.  The
     helper reads its input twice (boundaries, local ranks; the
-    per-bucket totals derive from the local-rank output since the r14
-    A/B — see Phase 2); a raw column-pruned scan is cheap to read
-    twice, but a COMPUTED input (an aggregate, a previous rank stage)
-    should be materialized once — the same lazy-checkpoint discipline
-    graph.py's star contraction measured out.
+    per-bucket totals derive from the local-rank output — see Phase 2);
+    a raw column-pruned scan is cheap to read twice, but a COMPUTED
+    input (an aggregate, a previous rank stage) should be materialized
+    once — the same lazy-checkpoint discipline graph.py's star
+    contraction measured out.
 
     Returns ``df``'s columns plus the requested rank columns.
     """
@@ -181,12 +181,11 @@ def two_phase_rank(
         ),
     ).drop("_sg_bnds")
 
-    # Phase 1: local ranks within each value bucket.
+    # Phase 1: local ranks within each value bucket.  The local
+    # row_number is always computed: Phase 2 derives the bucket counts
+    # from it even when only a prefix sum was requested.
     wloc = Window.partitionBy(_BKT).orderBy(*order)
-    local_cols = []
-    if row_number_col or ntile:
-        local_cols.append(F.row_number().over(wloc).cast("long").alias(_LRN))
-    val = None
+    local_cols = [F.row_number().over(wloc).cast("long").alias(_LRN)]
     if prefix_sum:
         val = (
             F.col(prefix_sum[1])
@@ -204,30 +203,22 @@ def two_phase_rank(
     # offsets window is global-order over <= n_buckets aggregate rows —
     # bounded by construction (plan auditor exempts windows over
     # aggregates for exactly this shape).
-    if row_number_col or ntile:
-        # Per-bucket totals derived from the PHASE-1 WINDOW OUTPUT
-        # instead of re-aggregating `bucketed` (r14 measured A/B, see
-        # OPTIMIZATION_r14.md): the old aggregate branch re-executed
-        # the boundary percentile pass and the bucket assignment over
-        # the whole input a second time, while this branch's input is
-        # the same shuffle the window stage already wrote (reused at
-        # runtime).  count = MAX(local row_number) (exact: _LRN is
-        # 1..n per bucket); value sum = the running sum at the last
-        # row, selected by MAX(struct(_LRN, _LPS)) (_LRN unique within
-        # the bucket, so the struct max IS the last row's _LPS).
-        aggs = [F.max(F.col(_LRN)).alias("_sg_cnt")]
-        if prefix_sum:
-            aggs.append(
-                F.max(F.struct(F.col(_LRN), F.col(_LPS)))
-                .getField(_LPS)
-                .alias("_sg_vsum")
-            )
-        per = local.groupBy(_BKT).agg(*aggs)
-    else:
-        aggs = [F.count(F.lit(1)).alias("_sg_cnt")]
-        if prefix_sum:
-            aggs.append(F.sum(val).alias("_sg_vsum"))
-        per = bucketed.groupBy(_BKT).agg(*aggs)
+    # Per-bucket totals derive from the PHASE-1 WINDOW OUTPUT instead of
+    # re-aggregating `bucketed` (r14 measured A/B, see
+    # OPTIMIZATION_r14.md): an aggregate over `bucketed` re-executes the
+    # boundary percentile pass and the bucket assignment over the whole
+    # input a second time, while this input is the same shuffle the
+    # window stage already wrote (reused at runtime).  count = MAX(local
+    # row_number) (exact: _LRN is 1..n per bucket); value sum = the
+    # running sum at the last row, selected by MAX(struct(_LRN, _LPS))
+    # (_LRN unique within the bucket, so the struct max IS the last
+    # row's _LPS).
+    aggs = [F.max(F.col(_LRN)).alias("_sg_cnt")]
+    if prefix_sum:
+        aggs.append(
+            F.max(F.struct(F.col(_LRN), F.col(_LPS))).getField(_LPS).alias("_sg_vsum")
+        )
+    per = local.groupBy(_BKT).agg(*aggs)
     woff = Window.partitionBy(bounded_window_key(_BKT)).orderBy(_BKT)
     excl = woff.rowsBetween(Window.unboundedPreceding, -1)
     full = woff.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)

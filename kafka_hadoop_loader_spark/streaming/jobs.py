@@ -31,16 +31,6 @@ def hourly_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFr
     )
 
 
-def sliding_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Sliding 1h/15min window + watermark (4 state entries per event)."""
-    return (
-        events.withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
 def session_counts_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native session windows (30min inactivity gap) — the streaming
     form of window_session_batch."""

@@ -47,13 +47,16 @@ from __future__ import annotations
 import os
 import threading
 from collections import defaultdict
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from kafka_hadoop_loader_spark.session import configure_runtime
+
+# R7's fixed output layout: {target}/d=YYYY-MM-DD/h=HH
+PARTITION_COLS = ("d", "h")
 
 
 class _RunMetricsListener(StreamingQueryListener):
@@ -82,9 +85,6 @@ class _RunMetricsListener(StreamingQueryListener):
         qid = str(p.id)
         self.rows[qid] += n
         self.batches[qid] += 1
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         self._terminated[str(event.id)].set()
@@ -119,7 +119,6 @@ class LoaderConfig:
         " value double, props string"
     )
     max_files_per_trigger: int | None = None
-    extra_partition_cols: tuple = field(default_factory=tuple)
 
     def __post_init__(self) -> None:
         # Spark's sinks resolve format names and codec names
@@ -157,10 +156,9 @@ def kafka_source_options(cfg: LoaderConfig) -> dict[str, str]:
 
 def _read_stream(spark: SparkSession, cfg: LoaderConfig) -> DataFrame:
     if cfg.source == "kafka":
-        reader = spark.readStream.format("kafka")
-        for k, v in kafka_source_options(cfg).items():
-            reader = reader.option(k, v)
-        raw = reader.load()
+        raw = (
+            spark.readStream.format("kafka").options(**kafka_source_options(cfg)).load()
+        )
         # Kafka source fixed schema: key/value binary + metadata.  The
         # payload stays bytes until the JSON extraction below (R4).
         return raw.select(
@@ -211,10 +209,6 @@ _SINK_CODECS = {
     "text": {"none", "gzip", "bzip2", "lz4", "deflate", "snappy"},
     "json": {"none", "gzip", "bzip2", "lz4", "deflate", "snappy"},
 }
-
-
-class _DryRunStop(Exception):
-    """Internal: stop the plan-resolution block after a precise error."""
 
 
 def _is_missing_datasource_error(msg: str) -> bool:
@@ -298,10 +292,9 @@ def validate_config(spark: SparkSession, cfg: LoaderConfig, strict: bool = False
 
     # Resolve the actual transform plan against an empty static frame
     # with the source's exact post-_read_stream schema: catches DDL
-    # syntax errors, a timestamp_field absent from payload_schema, and
-    # partition-column collisions — the full analyzer pass, zero jobs.
+    # syntax errors and a timestamp_field absent from payload_schema —
+    # the full analyzer pass, zero jobs.
     out_schema = None
-    part_cols = ("d", "h", *cfg.extra_partition_cols)
     if cfg.timestamp_unit in ("s", "ms", "us"):
         try:
             from pyspark.sql.types import StructType
@@ -310,24 +303,16 @@ def validate_config(spark: SparkSession, cfg: LoaderConfig, strict: bool = False
                 f.name for f in StructType.fromDDL(cfg.payload_schema).fields
             }  # precise DDL error surfaces first
             if cfg.timestamp_field not in payload_fields:
+                # transform cannot resolve without it
                 errors.append(
                     f"timestamp_field {cfg.timestamp_field!r} not in payload_schema"
                 )
-                raise _DryRunStop  # transform cannot resolve without it
-            stand_in = spark.createDataFrame(
-                [],
-                "topic string, kafka_partition int, offset bigint, payload string",
-            )
-            plan = transform(cfg, stand_in)
-            fields = {f.name for f in plan.schema.fields}
-            missing = [c for c in cfg.extra_partition_cols if c not in fields]
-            if missing:
-                errors.append(f"extra_partition_cols not in output: {missing}")
-            if len(set(part_cols)) != len(part_cols):
-                errors.append(f"duplicate partition columns: {part_cols}")
-            out_schema = plan.schema.simpleString()
-        except _DryRunStop:
-            pass  # already reported precisely above
+            else:
+                stand_in = spark.createDataFrame(
+                    [],
+                    "topic string, kafka_partition int, offset bigint, payload string",
+                )
+                out_schema = transform(cfg, stand_in).schema.simpleString()
         except Exception as e:  # analyzer/DDL error — report, don't raise
             errors.append(f"transform plan does not resolve: {str(e)[:300]}")
 
@@ -335,11 +320,12 @@ def validate_config(spark: SparkSession, cfg: LoaderConfig, strict: bool = False
     # runs inside load() with no broker round-trip.
     connector_available = None
     if cfg.source == "kafka" and cfg.kafka_bootstrap:
-        reader = spark.readStream.format("kafka")
-        for k, v in kafka_source_options(cfg).items():
-            reader = reader.option(k, v)
         try:
-            raw = reader.load()
+            raw = (
+                spark.readStream.format("kafka")
+                .options(**kafka_source_options(cfg))
+                .load()
+            )
             connector_available = True
             got = {f.name for f in raw.schema.fields}
             need = {"topic", "partition", "offset", "value"}
@@ -367,7 +353,7 @@ def validate_config(spark: SparkSession, cfg: LoaderConfig, strict: bool = False
         },
         "connector_available": connector_available,
         "output_schema": out_schema,
-        "partition_cols": list(part_cols),
+        "partition_cols": list(PARTITION_COLS),
     }
     if strict and errors:
         raise ValueError("loader config invalid: " + "; ".join(errors))
@@ -384,6 +370,11 @@ def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
     Every run is preflighted by ``validate_config(strict=True)``: a bad
     knob aborts before a streaming query (and its checkpoint state)
     exists, with every config error listed at once.
+
+    ``batches`` and ``rows_written`` come from ``_RunMetricsListener``
+    only.  If the query's terminated event is not delivered, the counts
+    are unknown and the run raises ``RuntimeError`` instead of
+    returning a partial sum.
     """
     configure_runtime(spark)
     validate_config(spark, cfg, strict=True)
@@ -391,13 +382,9 @@ def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
     if cfg.output_format == "text":
         # R8 text-lines parity: the text sink takes exactly one string
         # column ("value" = the raw payload) plus the partition columns.
-        out = out.select(
-            F.col("payload").alias("value"), "d", "h", *cfg.extra_partition_cols
-        )
+        out = out.select(F.col("payload").alias("value"), *PARTITION_COLS)
     # one writer task per partition value: one file per hour per batch
-    out = out.repartition(
-        spark.sparkContext.defaultParallelism, "d", "h", *cfg.extra_partition_cols
-    )
+    out = out.repartition(spark.sparkContext.defaultParallelism, *PARTITION_COLS)
     listener = _RunMetricsListener()
     spark.streams.addListener(listener)
     try:
@@ -406,27 +393,24 @@ def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
             .option("path", cfg.target_path)
             .option("checkpointLocation", cfg.checkpoint_path)
             .option("compression", cfg.compression)
-            .partitionBy("d", "h", *cfg.extra_partition_cols)
+            .partitionBy(*PARTITION_COLS)
             .trigger(availableNow=True)
             .start()
         )
         qid = str(query.id)
         query.awaitTermination()
-        delivered = listener.wait_terminated(qid)
-        rows = listener.rows.get(qid, 0)
-        batches = listener.batches.get(qid, 0)
-        if not delivered and not batches:
-            # listener bus never delivered (shouldn't happen): fall back
-            # to the bounded recentProgress buffer rather than report 0
-            for p in query.recentProgress:
-                batches += 1
-                n = int(p.get("sink", {}).get("numOutputRows", 0) or 0)
-                if n < 0:
-                    n = int(p.get("numInputRows", 0) or 0)
-                rows += n
+        if not listener.wait_terminated(qid):
+            raise RuntimeError(
+                f"streaming query {qid} finished but its terminated event was "
+                "not delivered to the listener: row count unknown"
+            )
     finally:
         spark.streams.removeListener(listener)
-    return {"batches": batches, "rows_written": rows, "target": cfg.target_path}
+    return {
+        "batches": listener.batches[qid],
+        "rows_written": listener.rows[qid],
+        "target": cfg.target_path,
+    }
 
 
 def read_loaded(spark: SparkSession, target_path: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""True-streaming jobs: watermarked tumbling/sliding/session windows and
+"""True-streaming jobs: watermarked tumbling/session windows and
 streaming dedup over a file-stream source (no broker in env; the plans
 are source-agnostic so the Kafka path is identical)."""
 
