@@ -33,9 +33,11 @@ partition per batch.  Without the shuffle, every input task would
 write its own file into every hour it touches: many small files, a
 larger sink log, and more files for every reader to list and open.
 The shuffle's width is the session's core count, not
-``spark.sql.shuffle.partitions``: adaptive execution does not coalesce
-inside streaming micro-batches, so a small incremental run would
-otherwise schedule every empty reduce task.  The trade-off is skew:
+``spark.sql.shuffle.partitions``, so a small incremental run does not
+schedule a wide set of empty reduce tasks.  The loader's query runs
+with adaptive execution off: a repartition to a fixed count leaves
+nothing to coalesce, and with it on every micro-batch runs the shuffle's
+map stage as a Spark job of its own.  The trade-off is skew:
 one hot hour is written by a single task.  With
 maxFilesPerTrigger/maxOffsetsPerTrigger the loader backfills unbounded
 history in bounded-memory increments.  The d=/h= layout is what makes
@@ -44,55 +46,33 @@ every downstream query partition-prunable.
 
 from __future__ import annotations
 
+import dataclasses
 import os
-import threading
-from collections import defaultdict
+import weakref
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 from kafka_hadoop_loader_spark.session import configure_runtime
 
 # R7's fixed output layout: {target}/d=YYYY-MM-DD/h=HH
 PARTITION_COLS = ("d", "h")
 
+_HOUR_S = 3600
+_DAY_S = 24 * _HOUR_S
 
-class _RunMetricsListener(StreamingQueryListener):
-    """Accumulates per-query row/batch counts from progress events.
+# The loader's run raises the session's progress retention to this.  A
+# query's ``recentProgress`` keeps at most retention - 1 entries, so a
+# run that fills them may have dropped batches and cannot be counted.
+_PROGRESS_RETENTION = 10_000
+# Copied by the stream when it starts: one Spark job per micro-batch.
+_QUERY_CONFS = {"spark.sql.adaptive.enabled": "false"}
 
-    ``query.recentProgress`` is a ring buffer capped at
-    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100): a
-    backfill with more micro-batches (e.g. maxFilesPerTrigger=1 over a
-    large directory) silently undercounts if summed after the fact.  A
-    listener sees every batch exactly once, regardless of run length.
-    """
-
-    def __init__(self) -> None:
-        self.rows: dict[str, int] = defaultdict(int)
-        self.batches: dict[str, int] = defaultdict(int)
-        self._terminated: dict[str, threading.Event] = defaultdict(threading.Event)
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        n = int(p.sink.numOutputRows if p.sink.numOutputRows is not None else -1)
-        if n < 0:  # file sink reports -1 ("unknown") on some batches
-            n = int(p.numInputRows or 0)
-        qid = str(p.id)
-        self.rows[qid] += n
-        self.batches[qid] += 1
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        self._terminated[str(event.id)].set()
-
-    def wait_terminated(self, qid: str, timeout: float = 30.0) -> bool:
-        """Progress events ride an async bus; don't read counts until the
-        terminated event (which is ordered after them) has landed."""
-        return self._terminated[qid].wait(timeout)
+# Per session: the validated, built output plan of each config.  The
+# value is the JVM plan, not a DataFrame, so it does not hold the
+# session alive.
+_PLANS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 @dataclass
@@ -181,6 +161,21 @@ def _read_stream(spark: SparkSession, cfg: LoaderConfig) -> DataFrame:
     )
 
 
+def _utc_layout(ts: Column) -> list[Column]:
+    """``d`` (yyyy-MM-dd) and ``h`` (HH) of the UTC hour of ``ts``.
+
+    Arithmetic on epoch seconds, so the session time zone (which
+    ``date_format`` would use) never enters the layout.  Every operand
+    stays below 2**53, so the double divisions are exact."""
+    secs = F.unix_seconds(ts)
+    sec_of_day = F.pmod(secs, F.lit(_DAY_S))
+    days = ((secs - sec_of_day) / _DAY_S).cast("int")
+    return [
+        F.date_from_unix_date(days).cast("string").alias("d"),
+        F.lpad((sec_of_day / _HOUR_S).cast("int").cast("string"), 2, "0").alias("h"),
+    ]
+
+
 def transform(cfg: LoaderConfig, raw: DataFrame) -> DataFrame:
     """R5/R6/R7: parse payload, extract event time, derive d/h buckets."""
     parsed = raw.withColumn("rec", F.from_json("payload", cfg.payload_schema))
@@ -197,8 +192,7 @@ def transform(cfg: LoaderConfig, raw: DataFrame) -> DataFrame:
         "offset",
         "payload",
         ts.alias("event_ts"),
-        F.date_format(ts, "yyyy-MM-dd").alias("d"),
-        F.date_format(ts, "HH").alias("h"),
+        *_utc_layout(ts),
     )
 
 
@@ -360,6 +354,50 @@ def validate_config(spark: SparkSession, cfg: LoaderConfig, strict: bool = False
     return report
 
 
+def _plan(spark: SparkSession, cfg: LoaderConfig) -> DataFrame:
+    """The preflighted output frame of ``cfg``, built once per session.
+
+    A config that fails ``validate_config`` raises and is not stored.  A
+    streaming frame can be started again: each ``start()`` builds its
+    source anew from the checkpoint."""
+    plans = _PLANS.setdefault(spark, {})
+    key = dataclasses.astuple(cfg)
+    if key not in plans:
+        validate_config(spark, cfg, strict=True)
+        out = transform(cfg, _read_stream(spark, cfg))
+        if cfg.output_format == "text":
+            # R8 text-lines parity: the text sink takes exactly one string
+            # column ("value" = the raw payload) plus the partition columns.
+            out = out.select(F.col("payload").alias("value"), *PARTITION_COLS)
+        # one writer task per partition value: one file per hour per batch
+        out = out.repartition(spark.sparkContext.defaultParallelism, *PARTITION_COLS)
+        plans[key] = out._jdf
+    return DataFrame(plans[key], spark)
+
+
+def _count(progress: list) -> tuple[int, int]:
+    """(batches, rows written) of a finished query's ``recentProgress``.
+
+    A trigger that found no new data leaves an entry without an
+    ``addBatch`` phase: it ran no batch and is not counted.  Raises when
+    the buffer may have dropped batches, since the count would be
+    partial."""
+    ran = [p for p in progress if "addBatch" in (p.durationMs or {})]
+    ids = [p.batchId for p in ran]
+    contiguous = ids == list(range(ids[0], ids[0] + len(ids))) if ids else True
+    if not contiguous or len(progress) >= _PROGRESS_RETENTION - 1:
+        raise RuntimeError(
+            f"query progress holds {len(progress)} entries (retention "
+            f"{_PROGRESS_RETENTION}), batch ids {ids[:1]}..{ids[-1:]}: batches may be "
+            "missing, row count unknown"
+        )
+    rows = 0
+    for p in ran:
+        n = int(p.sink.numOutputRows if p.sink.numOutputRows is not None else -1)
+        rows += n if n >= 0 else int(p.numInputRows or 0)  # file sink may report -1
+    return len(ran), rows
+
+
 def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
     """One bounded incremental run (the reference's `hadoop jar ... run`).
 
@@ -367,26 +405,32 @@ def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
     only data that arrived since the last run (R2/R9 parity, but
     exactly-once thanks to the file sink's transaction log).
 
-    Every run is preflighted by ``validate_config(strict=True)``: a bad
-    knob aborts before a streaming query (and its checkpoint state)
-    exists, with every config error listed at once.
+    The first run of each config in a session is preflighted by
+    ``validate_config(strict=True)``: a bad knob aborts before a
+    streaming query (and its checkpoint state) exists, with every config
+    error listed at once.  The checked, built plan is kept for the
+    session, so later runs of the same config skip the preflight and the
+    plan build.
 
-    ``batches`` and ``rows_written`` come from ``_RunMetricsListener``
-    only.  If the query's terminated event is not delivered, the counts
-    are unknown and the run raises ``RuntimeError`` instead of
-    returning a partial sum.
+    ``batches`` and ``rows_written`` are summed from the finished
+    query's ``recentProgress``, which is complete once
+    ``awaitTermination`` returns.  For the whole run the session's
+    ``spark.sql.streaming.numRecentProgressUpdates`` is raised (the
+    query reads it on every batch), so it applies session-wide until the
+    old value is restored.  If the progress is not one contiguous run of
+    batches, or fills the retention (it may have dropped some), the run
+    raises ``RuntimeError`` instead of returning a partial count.  The
+    query runs with adaptive execution off: one Spark job per batch.
     """
     configure_runtime(spark)
-    validate_config(spark, cfg, strict=True)
-    out = transform(cfg, _read_stream(spark, cfg))
-    if cfg.output_format == "text":
-        # R8 text-lines parity: the text sink takes exactly one string
-        # column ("value" = the raw payload) plus the partition columns.
-        out = out.select(F.col("payload").alias("value"), *PARTITION_COLS)
-    # one writer task per partition value: one file per hour per batch
-    out = out.repartition(spark.sparkContext.defaultParallelism, *PARTITION_COLS)
-    listener = _RunMetricsListener()
-    spark.streams.addListener(listener)
+    out = _plan(spark, cfg)
+    confs = {
+        "spark.sql.streaming.numRecentProgressUpdates": str(_PROGRESS_RETENTION),
+        **_QUERY_CONFS,
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         query = (
             out.writeStream.format(cfg.output_format)
@@ -397,20 +441,16 @@ def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
             .trigger(availableNow=True)
             .start()
         )
-        qid = str(query.id)
         query.awaitTermination()
-        if not listener.wait_terminated(qid):
-            raise RuntimeError(
-                f"streaming query {qid} finished but its terminated event was "
-                "not delivered to the listener: row count unknown"
-            )
+        progress = query.recentProgress
     finally:
-        spark.streams.removeListener(listener)
-    return {
-        "batches": listener.batches[qid],
-        "rows_written": listener.rows[qid],
-        "target": cfg.target_path,
-    }
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    batches, rows = _count(progress)
+    return {"batches": batches, "rows_written": rows, "target": cfg.target_path}
 
 
 def read_loaded(spark: SparkSession, target_path: str) -> DataFrame:

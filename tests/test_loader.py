@@ -10,9 +10,10 @@ import os
 
 import pytest
 
+from kafka_hadoop_loader_spark.session import configure_runtime
+from kafka_hadoop_loader_spark.streaming import loader
 from kafka_hadoop_loader_spark.streaming.loader import (
     LoaderConfig,
-    _RunMetricsListener,
     read_loaded,
     run_loader,
 )
@@ -159,41 +160,99 @@ def test_one_file_per_hour_partition_per_batch(spark, loader_dirs):
     assert read_loaded(spark, cfg.target_path).count() == 360
 
 
-def test_run_loader_counts_batches_past_the_progress_buffer(spark, loader_dirs):
-    """The counts come from the listener, which sees every batch, not
-    from ``query.recentProgress``, which keeps only the last
-    ``numRecentProgressUpdates`` of them."""
-    cfg = LoaderConfig(
+def _five_batches(loader_dirs) -> LoaderConfig:
+    """A config whose next run loads 5 one-file batches of 7 events."""
+    for k in range(5):
+        _write_jsonl(
+            f"{loader_dirs['input']}/part{k}.jsonl", _mk_events(100 * k, 7, BASE_US)
+        )
+    return LoaderConfig(
         input_path=loader_dirs["input"],
         target_path=loader_dirs["target"],
         checkpoint_path=loader_dirs["checkpoint"],
         max_files_per_trigger=1,
     )
-    for k in range(5):
-        _write_jsonl(
-            f"{loader_dirs['input']}/part{k}.jsonl", _mk_events(100 * k, 7, BASE_US)
-        )
-    with _session_confs(spark, {"spark.sql.streaming.numRecentProgressUpdates": "2"}):
+
+
+def test_run_loader_counts_batches_past_the_progress_buffer(spark, loader_dirs):
+    """The counts come from ``query.recentProgress``, whose retention
+    ``run_loader`` raises for the run: a session retention of 2 loses
+    none of the 5 batches, and is back to 2 afterwards."""
+    cfg = _five_batches(loader_dirs)
+    retention = "spark.sql.streaming.numRecentProgressUpdates"
+    with _session_confs(spark, {retention: "2"}):
         res = run_loader(spark, cfg)
+        assert spark.conf.get(retention) == "2"
     assert res["batches"] == 5
     assert res["rows_written"] == 35
     assert read_loaded(spark, cfg.target_path).count() == 35
 
 
-def test_run_loader_raises_when_progress_is_not_delivered(spark, loader_dirs, monkeypatch):
-    """Without the listener's terminated event the row count is
-    unknown: the run raises instead of returning a partial count."""
-    monkeypatch.setattr(
-        _RunMetricsListener, "wait_terminated", lambda self, qid, timeout=30.0: False
+def test_run_loader_raises_when_progress_may_have_wrapped(spark, loader_dirs, monkeypatch):
+    """A full progress buffer (Spark keeps retention - 1 entries) may
+    have dropped batches: the run raises instead of returning a partial
+    count."""
+    monkeypatch.setattr(loader, "_PROGRESS_RETENTION", 2)
+    cfg = _five_batches(loader_dirs)
+    with pytest.raises(RuntimeError, match="row count unknown"):
+        run_loader(spark, cfg)
+
+
+def test_run_loader_plans_each_config_once_per_session(spark, tmp_path, monkeypatch):
+    """The preflight and plan build run once per (session, config); a
+    config differing in any field gets its own plan."""
+    import glob
+
+    calls = []
+    real = loader.validate_config
+
+    def counting(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(loader, "validate_config", counting)
+    indir = str(tmp_path / "in")
+    cfg = LoaderConfig(
+        input_path=indir,
+        target_path=str(tmp_path / "out"),
+        checkpoint_path=str(tmp_path / "ckpt"),
     )
+    _write_jsonl(indir + "/a.jsonl", _mk_events(0, 10, BASE_US))
+    assert run_loader(spark, cfg)["rows_written"] == 10
+    _write_jsonl(indir + "/b.jsonl", _mk_events(100, 4, BASE_US))
+    assert run_loader(spark, cfg)["rows_written"] == 4
+    assert len(calls) == 1
+    assert read_loaded(spark, cfg.target_path).count() == 14
+
+    as_json = LoaderConfig(
+        input_path=indir,
+        target_path=str(tmp_path / "out_json"),
+        checkpoint_path=str(tmp_path / "ckpt_json"),
+        output_format="json",
+    )
+    assert run_loader(spark, as_json)["rows_written"] == 14
+    assert len(calls) == 2
+    assert glob.glob(str(tmp_path / "out_json" / "d=*" / "h=*" / "*.json.snappy"))
+    assert not glob.glob(str(tmp_path / "out_json" / "d=*" / "h=*" / "*.parquet"))
+
+
+def test_layout_is_utc_whatever_the_session_zone(spark, loader_dirs):
+    """``d``/``h`` are the UTC hour of the event even when the session
+    zone was changed after the engine configured it."""
+    import glob
+
+    configure_runtime(spark)
     cfg = LoaderConfig(
         input_path=loader_dirs["input"],
         target_path=loader_dirs["target"],
         checkpoint_path=loader_dirs["checkpoint"],
     )
-    _write_jsonl(loader_dirs["input"] + "/b.jsonl", _mk_events(0, 3, BASE_US))
-    with pytest.raises(RuntimeError, match="row count unknown"):
+    # 2024-01-01T05:00Z is midnight in New York
+    _write_jsonl(loader_dirs["input"] + "/b.jsonl", _mk_events(0, 1, BASE_US + 5 * 3_600_000_000))
+    with _session_confs(spark, {"spark.sql.session.timeZone": "America/New_York"}):
         run_loader(spark, cfg)
+    hours = glob.glob(os.path.join(cfg.target_path, "d=*", "h=*"))
+    assert [os.path.relpath(h, cfg.target_path) for h in hours] == ["d=2024-01-01/h=05"]
 
 
 def test_cli_end_to_end_incremental(spark, tmp_path):
@@ -452,8 +511,9 @@ def test_run_loader_preflights_strictly(spark, tmp_path):
         compression="brotli",
         output_format="text",  # brotli is not a text codec
     )
-    with _pytest.raises(ValueError, match="compression"):
-        run_loader(spark, cfg)
+    for _ in range(2):  # a config that fails its preflight is never kept
+        with _pytest.raises(ValueError, match="compression"):
+            run_loader(spark, cfg)
     assert not ckpt.exists()
 
 
