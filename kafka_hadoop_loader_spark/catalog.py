@@ -68,20 +68,28 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.schema(schema).parquet(path)
     if name == "events":
         dt = dict(df.dtypes).get("ts")
+        # Both directions go through NTZ arithmetic or UTC-pinned
+        # constructors, never an NTZ<->LTZ cast: such a cast reads the
+        # session zone, which a caller may change after configure_runtime.
         if dt == "bigint":
             # ns -> us truncation, then NTZ so outputs match DuckDB's naive
-            # timestamps (session zone is UTC, so the cast is wall-clock id).
+            # timestamps.
             df = (
                 df.withColumn("ts_us", F.expr("ts DIV 1000"))
-                .withColumn("ts", F.timestamp_micros(F.col("ts_us")).cast("timestamp_ntz"))
+                .withColumn(
+                    "ts",
+                    F.expr("timestampadd(MICROSECOND, ts_us, TIMESTAMP_NTZ'1970-01-01 00:00:00')"),
+                )
             )
         elif dt in ("timestamp", "timestamp_ntz"):
-            # µs parquet timestamp.  NTZ<->LTZ casts are wall-clock
-            # identity under the UTC session zone, so the epoch-µs view
-            # is exact and matches DuckDB's epoch_us(ts).
-            df = (
-                df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-                .withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
+            # µs parquet timestamp; the epoch-µs view reads the wall clock
+            # as UTC and matches DuckDB's epoch_us(ts).
+            df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz")).withColumn(
+                "ts_us",
+                F.expr(
+                    "unix_micros(make_timestamp(year(ts), month(ts), day(ts),"
+                    " hour(ts), minute(ts), date_part('SECOND', ts), 'UTC'))"
+                ),
             )
     return df
 

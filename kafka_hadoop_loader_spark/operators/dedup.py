@@ -41,18 +41,14 @@ from kafka_hadoop_loader_spark.registry import register
 N_HASHES = 64
 N_BANDS = 16
 ROWS_PER_BAND = 4
-# Near-dup verify threshold on exact 3-gram shingle Jaccard.  Shared by
-# the batch cascade (_minhash_pairs) and the streaming ingest gate's
-# within-batch verify (streaming/jobs.py) — ONE constant so the two can
-# never drift.
+# Near-dup verify threshold on exact 3-gram shingle Jaccard, applied to
+# every minhash candidate pair of the cascade (_minhash_pairs).
 ND_JACCARD_T = 0.5
 
 
 def exact_jaccard(a, b):
-    """Exact set Jaccard of two shingle-hash array columns — THE verify
-    expression of the near-dup cascade, shared (like _bands_from_sig's
-    band keys) by every caller so batch and streaming verdicts are
-    identical by construction, not by parallel maintenance."""
+    """Exact set Jaccard of two shingle-hash array columns — the verify
+    expression of the near-dup cascade, compared against ND_JACCARD_T."""
     return (
         F.size(F.array_intersect(a, b)).cast("double")
         / F.size(F.array_union(a, b)).cast("double")

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 
 from kafka_hadoop_loader_spark.catalog import table
 from kafka_hadoop_loader_spark.registry import register
+from kafka_hadoop_loader_spark.streaming.loader import PARTITION_COLS, _utc_layout
 
 # One temp root per process, removed at exit — repeated driver/bench/
 # pytest runs must not accumulate events-slice copies under /tmp.
@@ -209,8 +210,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.date_format("ts", "yyyy-MM-dd").alias("d"),
-        F.format_string("%02d", F.hour("ts")).alias("h"),
+        *_utc_layout(F.timestamp_micros("ts_us")),
     )
     path = os.path.join(_temp_root(), "events_by_dh")
     # Bound the demo write to 3 days x 24 hourly buckets (the full
@@ -226,7 +226,12 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition on the partition columns: one writer/file per (d, h) —
     # without this every task writes a sliver into every bucket and a
     # 1000-executor run yields millions of small files.
-    sliced.repartition("d", "h").write.mode("overwrite").partitionBy("d", "h").parquet(path)
+    (
+        sliced.repartition(*PARTITION_COLS)
+        .write.mode("overwrite")
+        .partitionBy(*PARTITION_COLS)
+        .parquet(path)
+    )
 
     # read back ONLY the earliest day: broadcast 1-row join on the
     # partition column, the dynamic-partition-pruning shape.  Explicit
@@ -563,8 +568,9 @@ _parity_done: set[str] = set()
     against the source of truth: per-bucket counts, id ranges, and
     checksums must equal the oracle computed on the original parquet.
     sink_partitioned proves single-day pruning; this is the full-load
-    parity certificate — a user of the reference switching to this
-    engine runs exactly this job.""",
+    parity certificate.  It is a batch write, not a run_loader run: the
+    d/h buckets come from the loader's layout helper (_utc_layout), so
+    the layout is the one run_loader writes.""",
 )
 def reference_loader_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
@@ -580,17 +586,11 @@ def reference_loader_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "user_id",
             "ts_us",
-            F.date_format(
-                F.timestamp_micros(F.col("ts_us")).cast("timestamp_ntz"),
-                "yyyy-MM-dd",
-            ).alias("d"),
-            F.format_string(
-                "%02d", F.hour(F.timestamp_micros(F.col("ts_us")))
-            ).alias("h"),
+            *_utc_layout(F.timestamp_micros("ts_us")),
         )
         (
-            bucketed.repartition(F.col("d"), F.col("h"))
-            .write.partitionBy("d", "h")
+            bucketed.repartition(*PARTITION_COLS)
+            .write.partitionBy(*PARTITION_COLS)
             .mode("overwrite")
             .parquet(out)
         )

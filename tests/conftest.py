@@ -4,6 +4,7 @@ row-count + column + order-insensitive value-hash gate)."""
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import sys
@@ -28,6 +29,22 @@ def spark():
     s = get_spark("pytest", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@contextlib.contextmanager
+def session_confs(spark, confs: dict[str, str]):
+    """Set session confs for the block, then restore the old values."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @pytest.fixture(scope="session")

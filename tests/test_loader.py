@@ -4,7 +4,6 @@ exactly-once on replay."""
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 
@@ -17,6 +16,7 @@ from kafka_hadoop_loader_spark.streaming.loader import (
     read_loaded,
     run_loader,
 )
+from tests.conftest import session_confs
 
 
 def _write_jsonl(path: str, records: list[dict]) -> None:
@@ -41,22 +41,6 @@ def _mk_events(start_id: int, n: int, base_us: int) -> list[dict]:
 
 
 BASE_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
-
-
-@contextlib.contextmanager
-def _session_confs(spark, confs: dict[str, str]):
-    """Set session confs for the block, then restore the old values."""
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @pytest.fixture()
@@ -140,7 +124,7 @@ def test_one_file_per_hour_partition_per_batch(spark, loader_dirs):
             f"{loader_dirs['input']}/part{k}.jsonl", _mk_events(1000 * k, 120, BASE_US)
         )
     # tiny splits so the batch is read by several input tasks
-    with _session_confs(
+    with session_confs(
         spark,
         {
             "spark.sql.files.openCostInBytes": "1",
@@ -180,7 +164,7 @@ def test_run_loader_counts_batches_past_the_progress_buffer(spark, loader_dirs):
     none of the 5 batches, and is back to 2 afterwards."""
     cfg = _five_batches(loader_dirs)
     retention = "spark.sql.streaming.numRecentProgressUpdates"
-    with _session_confs(spark, {retention: "2"}):
+    with session_confs(spark, {retention: "2"}):
         res = run_loader(spark, cfg)
         assert spark.conf.get(retention) == "2"
     assert res["batches"] == 5
@@ -249,7 +233,7 @@ def test_layout_is_utc_whatever_the_session_zone(spark, loader_dirs):
     )
     # 2024-01-01T05:00Z is midnight in New York
     _write_jsonl(loader_dirs["input"] + "/b.jsonl", _mk_events(0, 1, BASE_US + 5 * 3_600_000_000))
-    with _session_confs(spark, {"spark.sql.session.timeZone": "America/New_York"}):
+    with session_confs(spark, {"spark.sql.session.timeZone": "America/New_York"}):
         run_loader(spark, cfg)
     hours = glob.glob(os.path.join(cfg.target_path, "d=*", "h=*"))
     assert [os.path.relpath(h, cfg.target_path) for h in hours] == ["d=2024-01-01/h=05"]

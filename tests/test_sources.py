@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import os
 
-from tests.conftest import SF_DIR, assert_matches_oracle
+import pytest
+
+from tests.conftest import SF_DIR, assert_matches_oracle, session_confs
 
 
 def test_scan_json_matches_oracle(spark, duck):
@@ -27,6 +29,37 @@ def test_sink_partitioned_matches_oracle(spark, duck):
 
     q = registry.load_all()["sink_partitioned"]
     assert_matches_oracle(q.fn(spark, SF_DIR), q.oracle, duck)
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_events_time_columns_ignore_session_zone(spark, tmp_path, unit):
+    """``ts`` (wall clock) and ``ts_us`` (epoch µs) of the events table
+    read the stored timestamp as UTC in both fixture layouts, even when
+    the session zone was changed after the engine configured the
+    session.  The d/h layout queries bucket on ``ts_us``."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_hadoop_loader_spark.catalog import table
+    from kafka_hadoop_loader_spark.session import configure_runtime
+
+    walls = [
+        dt.datetime(2024, 1, 1, 0, 0),
+        dt.datetime(2024, 3, 10, 2, 30, 0, 123456),  # a New York DST gap
+        dt.datetime(1969, 12, 31, 23, 59, 59, 500000),
+    ]
+    epoch_us = [(w - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1) for w in walls]
+    pq.write_table(
+        pa.table({"event_id": [0, 1, 2], "ts": pa.array(walls, pa.timestamp(unit))}),
+        str(tmp_path / "events.parquet"),
+    )
+    configure_runtime(spark)
+    with session_confs(spark, {"spark.sql.session.timeZone": "America/New_York"}):
+        rows = table(spark, str(tmp_path), "events").orderBy("event_id").collect()
+    assert [r.ts_us for r in rows] == epoch_us
+    assert [r.ts for r in rows] == walls
 
 
 def test_partitioned_sink_layout_and_pruning(spark, tmp_path):

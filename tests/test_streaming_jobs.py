@@ -179,87 +179,6 @@ def test_stateful_running_stats_across_batches(spark, tmp_path):
     assert max(r.max_value for r in rows) == 53.0
 
 
-def test_transform_with_state_running_stats(spark, tmp_path):
-    """transformWithStateInPandas (arbitrary-state v2) carries the same
-    per-user running stats across micro-batches via a named ValueState
-    handle — mirrors the applyInPandasWithState test so both stateful
-    APIs are pinned to identical cross-batch semantics.
-
-    Environment gate: the v2 state server speaks protobuf between the
-    JVM and the Python driver worker; this container has no
-    google.protobuf (and installs are out of scope), which crashes the
-    worker at stream START (plan construction is fine).  Skip, don't
-    fail, when protobuf is absent — same policy as the multimodal
-    decode stub (no codecs in container)."""
-    recs1 = [
-        {"event_id": i, "ts": BASE_US + i * 60_000_000, "user_id": i % 2,
-         "event_type": "click", "value": float(i), "props": "{}"}
-        for i in range(6)
-    ]
-    recs2 = [
-        {"event_id": 100 + i, "ts": BASE_US + (100 + i) * 60_000_000,
-         "user_id": i % 2, "event_type": "view", "value": 50.0 + i, "props": "{}"}
-        for i in range(4)
-    ]
-    _write_events(str(tmp_path / "in" / "a.jsonl"), recs1)
-    _write_events(str(tmp_path / "in" / "b.jsonl"), recs2)
-
-    from kafka_hadoop_loader_spark.streaming.loader import (
-        LoaderConfig,
-        _read_stream,
-        transform,
-    )
-
-    cfg = LoaderConfig(input_path=str(tmp_path / "in"), max_files_per_trigger=1)
-    raw = transform(cfg, _read_stream(spark, cfg))
-    rec = raw.selectExpr(
-        "from_json(payload, 'event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string') AS r",
-        "event_ts",
-    ).select("r.event_id", "r.user_id", "r.value", "event_ts")
-
-    from kafka_hadoop_loader_spark.streaming import jobs
-
-    # plan construction + output schema are validated unconditionally
-    df = jobs.user_running_stats_tws(rec)
-    assert [f.name for f in df.schema.fields] == [
-        "user_id", "n_events", "sum_value", "max_value"
-    ]
-
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "google.protobuf unavailable: transformWithState's "
-            "state-server protocol cannot start in this container"
-        )
-    q = (
-        df.writeStream.format("memory")
-        .queryName("tws_t")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM tws_t").collect()
-    per_user_max = {}
-    for r in rows:
-        per_user_max[r.user_id] = max(per_user_max.get(r.user_id, 0), r.n_events)
-    assert per_user_max == {0: 5, 1: 5}
-    assert len(rows) == 4
-    intermediates = sorted(r.n_events for r in rows)[:2]
-    assert intermediates in ([2, 2], [3, 3])
-    assert sorted(r.n_events for r in rows)[2:] == [5, 5]
-    assert max(r.max_value for r in rows) == 53.0
-    # sum carried across batches: user totals = sum of all their values
-    total = sum(r["value"] for r in recs1 + recs2)
-    finals = {r.user_id: r.sum_value for r in rows if r.n_events == 5}
-    assert abs(sum(finals.values()) - total) < 1e-9
-
-
 def test_foreach_batch_upsert_state(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt_upsert")
@@ -527,121 +446,3 @@ def test_backfill_overwrite_days(spark, tmp_path):
         if f.endswith(".parquet")
     )
     assert day1_mtime2 == day1_mtime  # untouched day was not rewritten
-
-
-def test_session_eviction_tws(spark, tmp_path):
-    """Timer-driven session eviction (transformWithStateInPandas,
-    timeMode=EventTime): plan construction, output schema, and the
-    append-mode/watermark wiring are validated unconditionally; the
-    actual run needs the protobuf state server (absent here) — same
-    gate as test_transform_with_state_running_stats."""
-    recs = [
-        {"event_id": i, "ts": BASE_US + i * 60_000_000, "user_id": i % 2,
-         "event_type": "click", "value": float(i), "props": "{}"}
-        for i in range(6)
-    ]
-    _write_events(str(tmp_path / "in" / "a.jsonl"), recs)
-
-    from kafka_hadoop_loader_spark.streaming.loader import (
-        LoaderConfig,
-        _read_stream,
-        transform,
-    )
-
-    cfg = LoaderConfig(input_path=str(tmp_path / "in"))
-    raw = transform(cfg, _read_stream(spark, cfg))
-    rec = raw.selectExpr(
-        "from_json(payload, 'event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string') AS r",
-        "event_ts",
-    ).select("r.event_id", "r.user_id", "r.value", "event_ts")
-
-    from kafka_hadoop_loader_spark.streaming import jobs
-
-    df = jobs.session_eviction_tws(rec, gap_minutes=30)
-    assert [f.name for f in df.schema.fields] == [
-        "user_id", "session_start_ms", "session_end_ms",
-        "n_events", "sum_value",
-    ]
-    assert df.isStreaming
-    # append-mode eviction requires an event-time watermark upstream;
-    # assert the plan actually carries one
-    assert "watermark" in df._jdf.queryExecution().analyzed().toString().lower()
-
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "google.protobuf unavailable: transformWithState's "
-            "state-server protocol cannot start in this container"
-        )
-    q = (
-        df.writeStream.format("memory")
-        .queryName("tws_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM tws_sessions").collect()
-    # sessions only close when the watermark passes end+gap; with a
-    # single availableNow batch the final watermark may still hold the
-    # last session open, so assert on the closed subset's invariants
-    for r in rows:
-        assert r.session_start_ms <= r.session_end_ms
-        assert r.n_events >= 1
-
-
-def test_user_topk_tws(spark, tmp_path):
-    """ListState top-k (transformWithStateInPandas): plan construction
-    and output schema unconditionally; the run needs the protobuf
-    state server (absent here) — same gate as the other tws tests."""
-    recs = [
-        {"event_id": i, "ts": BASE_US + i * 60_000_000, "user_id": i % 2,
-         "event_type": "click", "value": float(i * 7 % 50), "props": "{}"}
-        for i in range(10)
-    ]
-    _write_events(str(tmp_path / "in" / "a.jsonl"), recs)
-
-    from kafka_hadoop_loader_spark.streaming import jobs
-    from kafka_hadoop_loader_spark.streaming.loader import (
-        LoaderConfig,
-        _read_stream,
-        transform,
-    )
-
-    cfg = LoaderConfig(input_path=str(tmp_path / "in"))
-    raw = transform(cfg, _read_stream(spark, cfg))
-    rec = raw.selectExpr(
-        "from_json(payload, 'event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string') AS r",
-    ).select("r.user_id", "r.value")
-
-    df = jobs.user_topk_tws(rec, k=3)
-    assert [f.name for f in df.schema.fields] == ["user_id", "rank", "value"]
-    assert df.isStreaming
-
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "google.protobuf unavailable: transformWithState's "
-            "state-server protocol cannot start in this container"
-        )
-    q = (
-        df.writeStream.format("memory")
-        .queryName("tws_topk")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_topk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM tws_topk").collect()
-    for r in rows:
-        assert 1 <= r["rank"] <= 3
