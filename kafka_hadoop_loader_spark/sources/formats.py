@@ -1,12 +1,12 @@
-"""Batch sources/sinks beyond parquet (SURVEY.md §2.B "Scans / sources /
-sinks"): JSON and CSV scans with explicit schemas, and the batch analogue
-of the reference's time-bucketed MultiOutputFormat sink
-[pub: src/main/java/io/amient/kafka/hadoop/io/MultiOutputFormat.java]:
-a dynamic-partitioned parquet write (d=/h= directories) whose read-back
-path partition-prunes.
+"""Sources beyond parquet (SURVEY.md §2.B "Scans / sources / sinks"):
+JSON, CSV, ORC, gzip-text, XML, binary-file and custom Python DataSource
+scans with declared schemas, SQL table lifecycles, and two read-backs of
+the reference's time-bucketed MultiOutputFormat sink
+[pub: src/main/java/io/amient/kafka/hadoop/io/MultiOutputFormat.java]
+as the loader writes it.
 
-Each registered query is a full round-trip: write a fixture slice in the
-format under test, read it back with a declared StructType (never
+Each scan query is a full round-trip: write a fixture slice in the
+format under test, read it back with a declared schema (never
 inferSchema on the hot path — schema inference is an extra full scan),
 aggregate, and compare against the oracle computed directly on the
 original parquet.  Only integer/string columns cross the text formats so
@@ -14,12 +14,14 @@ the round-trip is bit-exact (doubles through JSON/CSV text would be
 shortest-roundtrip-printed, which is exact too, but integers make the
 determinism obvious).
 
+The d=/h= layout queries (sink_partitioned, reference_loader_parity)
+write nothing themselves: the JSON round-trip is the files source of
+one ``run_loader`` run per process, and both read its output back with
+``read_loaded``.  The d/h derivation, the pre-write repartition and the
+partitioned write live only in ``streaming/loader.py``.
+
 Scale notes: text formats are line-splittable, so a 100 TB JSON/CSV
-input parallelizes per HDFS block with no coordination; the partitioned
-sink writes one file per (task, partition-value) — pair it with a
-repartition on the partition columns to avoid the small-files explosion
-(done below), which is the single most common 100 TB parquet-sink
-mistake.
+input parallelizes per HDFS block with no coordination.
 """
 
 from __future__ import annotations
@@ -31,16 +33,10 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from kafka_hadoop_loader_spark.catalog import table
 from kafka_hadoop_loader_spark.registry import register
-from kafka_hadoop_loader_spark.streaming.loader import PARTITION_COLS, _utc_layout
+from kafka_hadoop_loader_spark.streaming.loader import LoaderConfig, read_loaded, run_loader
 
 # One temp root per process, removed at exit — repeated driver/bench/
 # pytest runs must not accumulate events-slice copies under /tmp.
@@ -95,14 +91,10 @@ def _round_trip_path(spark: SparkSession, sf_dir: str, fmt: str) -> str:
         _round_trips[key] = path
     return _round_trips[key]
 
-_EVENTS_SLICE_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("ts_us", LongType()),
-    ]
-)
+
+# The events slice's schema, as DDL: the scans read with it and the
+# loader parses its JSON payloads with it.
+_EVENTS_SLICE_DDL = "event_id bigint, user_id bigint, event_type string, ts_us bigint"
 
 
 def _events_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,7 +136,7 @@ def _slice_agg(df: DataFrame) -> DataFrame:
     is lossless.  Line-delimited JSON splits per block at scale.""",
 )
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    back = spark.read.schema(_EVENTS_SLICE_SCHEMA).json(
+    back = spark.read.schema(_EVENTS_SLICE_DDL).json(
         _round_trip_path(spark, sf_dir, "json")
     )
     return _slice_agg(back)
@@ -159,7 +151,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     [pub: …/io/MultiOutputFormat.java: text lines + codec].""",
 )
 def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    back = spark.read.schema(_EVENTS_SLICE_SCHEMA).option("header", True).csv(
+    back = spark.read.schema(_EVENTS_SLICE_DDL).option("header", True).csv(
         _round_trip_path(spark, sf_dir, "csv")
     )
     return _slice_agg(back)
@@ -176,10 +168,46 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     the declared-schema read skips the footer-only inference pass.""",
 )
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    back = spark.read.schema(_EVENTS_SLICE_SCHEMA).orc(
+    back = spark.read.schema(_EVENTS_SLICE_DDL).orc(
         _round_trip_path(spark, sf_dir, "orc")
     )
     return _slice_agg(back)
+
+
+# sf_dir -> target of the one loader run over its JSON round-trip, or
+# None when that run wrote no rows.
+_loads: dict[str, str | None] = {}
+
+
+def _loaded_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events slice as the loader writes it: its JSON round-trip is
+    the files source of one ``run_loader`` run (event time from
+    ``ts_us``), read back with ``read_loaded`` and the payload parsed.
+
+    The load runs once per process per ``sf_dir``; a repeat call only
+    reads.  ``read_loaded`` infers its schema from the loaded files, so
+    a run that wrote none reads as an empty frame of the same columns."""
+    key = os.path.abspath(sf_dir)
+    if key not in _loads:
+        root = os.path.join(_temp_root(), f"loaded_{len(_loads)}")
+        cfg = LoaderConfig(
+            input_path=_round_trip_path(spark, sf_dir, "json"),
+            target_path=os.path.join(root, "out"),
+            checkpoint_path=os.path.join(root, "checkpoint"),
+            timestamp_field="ts_us",
+            payload_schema=_EVENTS_SLICE_DDL,
+        )
+        wrote = run_loader(spark, cfg)["rows_written"]
+        _loads[key] = cfg.target_path if wrote else None
+    if _loads[key] is None:
+        return spark.createDataFrame([], f"{_EVENTS_SLICE_DDL}, d date, h int")
+    rec = F.from_json("payload", _EVENTS_SLICE_DDL).alias("rec")
+    return read_loaded(spark, _loads[key]).select(rec, "d", "h").select("rec.*", "d", "h")
+
+
+def _layout_keys() -> list:
+    """The loaded table's ``d``/``h`` as the oracles type them."""
+    return [F.col("d").cast("string").alias("d"), F.col("h").cast("bigint").alias("h")]
 
 
 @register(
@@ -197,59 +225,21 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY d, h
         ORDER BY d, h
     """,
-    doc="""The reference's time-bucketed sink, batch form (R7/R8): write
-    events partitioned by d=YYYY-MM-DD/h=HH with a pre-write repartition
-    on the partition columns (one file per bucket, not one per task per
-    bucket), then read back ONLY the first day — the scan must touch
-    just that day's directories (partition pruning; verified in pytest
-    via the input-files list).  Oracle recomputes the same per-bucket
-    aggregate for that day directly from parquet.""",
+    doc="""The reference's time-bucketed sink (R7), read back one day:
+    the events slice as run_loader loads it into d=YYYY-MM-DD/h=HH
+    (shared with reference_loader_parity, loaded once per process),
+    filtered to its first day.  The day comes from a scalar subquery,
+    not a driver-side collect, and the scan's partition filter carries
+    it, so only that day's directories are read (verified in pytest on
+    the executed plan's PartitionFilters).  The oracle recomputes the
+    same per-hour aggregate for that day directly from parquet.""",
 )
 def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        *_utc_layout(F.timestamp_micros("ts_us")),
-    )
-    path = os.path.join(_temp_root(), "events_by_dh")
-    # Bound the demo write to 3 days x 24 hourly buckets (the full
-    # fixture spans 720 (d, h) buckets and file-per-bucket creation
-    # would dominate the benchmark) — via a broadcast 1-row min join,
-    # never a driver-side collect.
-    mind = e.agg(F.min("d").alias("min_d"))
-    sliced = e.join(
-        F.broadcast(mind),
-        F.col("d")
-        <= F.date_format(F.date_add(F.to_date(F.col("min_d")), 2), "yyyy-MM-dd"),
-    ).drop("min_d")
-    # repartition on the partition columns: one writer/file per (d, h) —
-    # without this every task writes a sliver into every bucket and a
-    # 1000-executor run yields millions of small files.
-    (
-        sliced.repartition(*PARTITION_COLS)
-        .write.mode("overwrite")
-        .partitionBy(*PARTITION_COLS)
-        .parquet(path)
-    )
-
-    # read back ONLY the earliest day: broadcast 1-row join on the
-    # partition column, the dynamic-partition-pruning shape.  Explicit
-    # schema (declared-schema doctrine): also keeps the read well-typed
-    # when the slice is EMPTY (zero files -> inference would fail) and
-    # pins the partition columns to strings.
-    back = spark.read.schema(sliced.schema).parquet(path)
-    first = back.select(F.min("d").alias("min_d"))
-    pruned = back.join(F.broadcast(first), F.col("d") == F.col("min_d")).drop("min_d")
+    back = _loaded_events(spark, sf_dir)
+    first_day = back.where(F.col("d") == back.select(F.min("d")).scalar())
     return (
-        pruned.groupBy("d", "h")
+        first_day.groupBy(*_layout_keys())
         .agg(F.count("*").alias("n"), F.sum("user_id").alias("sum_user_id"))
-        .select(
-            F.col("d").cast("string").alias("d"),
-            F.col("h").cast("string").cast("bigint").alias("h"),
-            "n",
-            "sum_user_id",
-        )
         .orderBy("d", "h")
     )
 
@@ -334,7 +324,7 @@ def _make_jsonl_datasource():
             return "khl_jsonl"
 
         def schema(self):
-            return "event_id bigint, user_id bigint, event_type string, ts_us bigint"
+            return _EVENTS_SLICE_DDL
 
         def reader(self, schema):
             return _make_jsonl_reader(self.options)
@@ -541,9 +531,6 @@ def insert_overwrite_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_parity_done: set[str] = set()
-
-
 @register(
     "reference_loader_parity",
     oracle="""
@@ -557,59 +544,22 @@ _parity_done: set[str] = set()
         GROUP BY d, h
         ORDER BY d, h
     """,
-    doc="""The reference's COMPLETE batch-side job as one query
+    doc="""The reference's complete job, run by the loader itself
     [pub: HadoopJobMapper.java + MultiOutputFormat.java, R1-R8]:
-    consume the message stream (JSON lines — the loader's input form,
-    written once per process), parse payloads with a declared schema,
-    extract the event timestamp from the payload (R6), bucket into
-    d=YYYY-MM-DD/h=HH, write the time-partitioned columnar layout with
-    a pre-write repartition on the bucket columns (R7, one file per
-    bucket), then read the WHOLE layout back and prove it byte-complete
-    against the source of truth: per-bucket counts, id ranges, and
+    run_loader consumes the events slice as a stream of JSON lines (a
+    files source over the JSON round-trip), parses each payload with
+    the slice's declared schema, takes the event time from the payload
+    (R6), and writes the d=YYYY-MM-DD/h=HH parquet layout (R7) in one
+    bounded availableNow run, once per process.  The query reads the
+    WHOLE layout back through read_loaded and proves it complete
+    against the source of truth: per-bucket counts, id ranges and
     checksums must equal the oracle computed on the original parquet.
-    sink_partitioned proves single-day pruning; this is the full-load
-    parity certificate.  It is a batch write, not a run_loader run: the
-    d/h buckets come from the loader's layout helper (_utc_layout), so
-    the layout is the one run_loader writes.""",
+    sink_partitioned reads one day of the same load.""",
 )
 def reference_loader_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-
-    tag = hashlib.md5(os.path.abspath(sf_dir.rstrip("/")).encode()).hexdigest()[:8]
-    out = os.path.join(_temp_root(), f"parity_{tag}")
-    if f"parity_{tag}" not in _parity_done or not os.path.isdir(out):
-        # the loader's input: JSON lines (Kafka-payload stand-in)
-        raw = spark.read.schema(_EVENTS_SLICE_SCHEMA).json(
-            _round_trip_path(spark, sf_dir, "json")
-        )
-        bucketed = raw.select(
-            "event_id",
-            "user_id",
-            "ts_us",
-            *_utc_layout(F.timestamp_micros("ts_us")),
-        )
-        (
-            bucketed.repartition(*PARTITION_COLS)
-            .write.partitionBy(*PARTITION_COLS)
-            .mode("overwrite")
-            .parquet(out)
-        )
-        _parity_done.add(f"parity_{tag}")
-    # explicit schema: partition-type inference would turn d= into
-    # DATE (the contract and oracle use the directory string form) and
-    # would FAIL outright on an empty layout (zero files)
-    back_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("ts_us", LongType()),
-            StructField("d", StringType()),
-            StructField("h", StringType()),
-        ]
-    )
-    back = spark.read.schema(back_schema).parquet(out)
     return (
-        back.groupBy("d", F.col("h").cast("bigint").alias("h"))
+        _loaded_events(spark, sf_dir)
+        .groupBy(*_layout_keys())
         .agg(
             F.count("*").alias("n"),
             F.min("event_id").alias("min_event_id"),
@@ -684,11 +634,8 @@ def _corrupt_jsonl_path(spark: SparkSession, sf_dir: str) -> str:
 )
 def scan_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _corrupt_jsonl_path(spark, sf_dir)
-    schema = StructType(
-        [*_EVENTS_SLICE_SCHEMA.fields, StructField("_corrupt_record", StringType())]
-    )
     df = (
-        spark.read.schema(schema)
+        spark.read.schema(f"{_EVENTS_SLICE_DDL}, _corrupt_record string")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
@@ -762,7 +709,7 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = (
-        spark.read.schema(_EVENTS_SLICE_SCHEMA)
+        spark.read.schema(_EVENTS_SLICE_DDL)
         .option("rowTag", "event")
         .format("xml")
         .load(_round_trip_path(spark, sf_dir, "xml"))

@@ -246,11 +246,6 @@ ALLOWED = {
         "two_phase_rank.bnds": 1,
         "two_phase_rank.offs": 1,
     },
-    # 1-row min partitions
-    "sources/formats.py": {
-        "sink_partitioned.first": 1,
-        "sink_partitioned.mind": 1,
-    },
     # 1-row global max
     "streaming/batch_windows.py": {
         "events_watermark_lag.g": 1,
