@@ -1613,8 +1613,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combining aggregate at source grain — token
     counts and digests are computed in the scan projection, nothing is
     re-read, and the output is |sources| rows.  This is the query you
-    schedule after every backfill (streaming.backfill_overwrite_days)
-    to diff the card against yesterday's.""",
+    schedule after every load to diff the card against yesterday's.""",
 )
 def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")

@@ -4,9 +4,8 @@ The reference's one "analytical" behavior is organizing a Kafka topic by
 event time (MultiOutputFormat time-bucketed directories — SURVEY.md §2.A
 R6/R7).  These queries are the DataFrame-native generalization: event-time
 extraction + tumbling/sliding/session windows, run in batch form so the
-DuckDB oracle can verify them.  The true streaming forms (watermarks,
-availableNow) live in ``streaming/loader.py`` / ``streaming/jobs.py`` and
-are covered by pytest.
+DuckDB oracle can verify them.  The package's one streaming query is the
+loader's (``streaming/loader.py``); these windows are batch queries only.
 
 Scale notes: all of these are single-shuffle hash aggregations on
 (time-bucket, key); at 100 TB the time-bucketed parquet layout written by
@@ -80,8 +79,7 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark's ``window()`` assigns each event to windowDuration/slideDuration
     overlapping epoch-aligned windows — the oracle reproduces the
-    assignment with time_bucket minus i*slide.  Streaming form in
-    streaming/jobs.py.
+    assignment with time_bucket minus i*slide.
     """,
 )
 def window_sliding_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,8 +271,8 @@ _LAG_SLA_US = 3_600_000_000  # 1h freshness SLA
     signal]: per (synthetic) topic-partition, the newest loaded event
     time, its lag behind the most advanced partition, and an SLA flag.
     A partition whose lag exceeds the watermark delay is exactly the
-    one whose late data the streaming jobs' withWatermark would drop —
-    this query is how you see that coming.
+    one whose late data a streaming query's ``withWatermark`` with that
+    delay would drop — this query is how you see that coming.
 
     Determinism: all values derive from event timestamps in the data
     (no wall clock — a wall-clock 'now' would be unreproducible);
@@ -342,9 +340,9 @@ def events_watermark_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     test would merge it.  The oracle therefore flags `>= gap`, and
     session_end is last-event-time + gap (the native window's `end`),
     not last-event-time.  One shuffle on user_id; the merging pass is
-    the same sort Spark already does for the aggregate.  (Streaming
-    form: streaming/jobs.py session_counts_stream uses the identical
-    primitive under a watermark.)""",
+    the same sort Spark already does for the aggregate.  (Spark's
+    ``session_window`` is the same primitive in a streaming query,
+    under a watermark.)""",
 )
 def window_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")

@@ -457,10 +457,12 @@ def read_loaded(spark: SparkSession, target_path: str) -> DataFrame:
     """Read the loader's output back as a partition-pruned table.
 
     The read goes through the file sink's ``_spark_metadata`` log, so it
-    sees only the files of committed batches.  ``d`` and ``h`` come back
-    as ``date`` and ``int``: Spark infers their types from the directory
-    names (``d=2024-01-01/h=00``).  The schema is inferred from the
-    loaded files, so a target that holds none raises."""
+    sees only the files of committed batches; a direct path or glob read
+    of the target also sees files left by a batch that never committed.
+    ``d`` and ``h`` come back as ``date`` and ``int``: Spark infers their
+    types from the directory names (``d=2024-01-01/h=00``).  The schema
+    is inferred from the loaded files, so a target that holds none
+    raises."""
     if not os.path.isdir(target_path):
         raise FileNotFoundError(target_path)
     return spark.read.option("basePath", target_path).parquet(target_path)

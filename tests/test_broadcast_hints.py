@@ -250,10 +250,6 @@ ALLOWED = {
     "streaming/batch_windows.py": {
         "events_watermark_lag.g": 1,
     },
-    # literal event-type dim
-    "streaming/jobs.py": {
-        "enrich_stream_static.dim": 1,
-    },
 }
 
 _RX = re.compile(r"F\.broadcast\(\s*([A-Za-z_]\w*)")

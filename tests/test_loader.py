@@ -109,6 +109,30 @@ def test_partition_pruning_on_loaded_data(spark, loader_dirs):
     assert "PartitionFilters" in plan
 
 
+def test_read_loaded_ignores_uncommitted_files(spark, loader_dirs):
+    """A batch that crashes inside ``addBatch`` can leave a data file
+    that no ``_spark_metadata`` entry names.  ``read_loaded`` does not
+    see it; a read of the hour directory's path does."""
+    import glob
+    import shutil
+
+    cfg = LoaderConfig(
+        input_path=loader_dirs["input"],
+        target_path=loader_dirs["target"],
+        checkpoint_path=loader_dirs["checkpoint"],
+    )
+    _write_jsonl(loader_dirs["input"] + "/b.jsonl", _mk_events(0, 120, BASE_US))
+    run_loader(spark, cfg)
+    hour = os.path.join(cfg.target_path, "d=2024-01-01", "h=00")
+    (committed,) = glob.glob(os.path.join(hour, "*.parquet"))
+    shutil.copy(committed, os.path.join(hour, "part-99999-orphan.c000.snappy.parquet"))
+
+    assert read_loaded(spark, cfg.target_path).count() == 120
+    # a path read is not exactly-once: the hour's 60 committed rows
+    # plus the orphan's 60
+    assert spark.read.parquet(hour).count() == 120
+
+
 def test_one_file_per_hour_partition_per_batch(spark, loader_dirs):
     """The write is repartitioned on d/h: however many input tasks read
     the batch, each hour directory receives exactly one file."""

@@ -5,7 +5,7 @@ here so a regression fails the suite instead of waiting for a reviewer:
 
 1. Driver-side materialization (`.collect` / `.toPandas` /
    `collectAsList` / `.toLocalIterator` / `.take` / `.head` /
-   `.first`) is banned outside the two documented non-hot-path sites —
+   `.first`) is banned outside the one documented non-hot-path site —
    a collect in an operator is a driver bottleneck that multiplies at
    100 TB.  (`F.first(...)` the AGGREGATE is excluded: it runs on
    executors.)
@@ -28,13 +28,9 @@ from collections import Counter
 
 from tests.test_broadcast_hints import _code_only, _sources
 
-# The two documented driver-side materializations:
-# - streaming/jobs.py foreachBatch collecting ONE micro-batch's distinct
-#   DAY partitions (bounded by days-per-batch; the standard
-#   dynamic-overwrite pattern)
-# - sources/formats.py one-time binaryFile fixture staging
+# The one documented driver-side materialization: sources/formats.py
+# one-time binaryFile fixture staging.
 COLLECT_ALLOWED = {
-    "streaming/jobs.py": 1,
     "sources/formats.py": 1,
 }
 
@@ -67,8 +63,9 @@ def test_no_driver_side_collect_outside_allowlist():
         if n:
             found[rel] = n
     assert found == COLLECT_ALLOWED, (
-        "Driver-side materialization drifted from the two documented "
-        f"sites: found {found}, allowed {COLLECT_ALLOWED}. A .collect() "
+        "Driver-side materialization drifted from the one documented "
+        "site (sources/formats.py fixture staging): found "
+        f"{found}, allowed {COLLECT_ALLOWED}. A .collect() "
         "in an operator hot path is a driver bottleneck at scale — "
         "restructure, or document and allowlist if genuinely bounded."
     )
