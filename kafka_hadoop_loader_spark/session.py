@@ -2,7 +2,8 @@
 
 The driver supplies its own SparkSession to ``queries()`` callables, so
 everything the engine *needs* must be settable at runtime on an existing
-session (``configure_runtime``).  ``get_spark`` is used by tests/bench.
+session (``configure_runtime``).  ``get_spark`` builds the engine's own
+session, used by the CLI loader, the tests and the benchmark.
 
 Scale notes (100 TB posture):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting
@@ -11,11 +12,25 @@ Scale notes (100 TB posture):
   cluster set ``spark.sql.shuffle.partitions`` ~ 2-3x total cores and
   let AQE coalesce down.
 - Arrow enabled for any Pandas-UDF path (vectorized transfer).
+
+Local file system: ``get_spark`` maps ``file://`` to Hadoop's raw local
+file system, so local tables and checkpoints get no ``.crc`` sidecar
+files.  ``ChecksumFileSystem`` writes one next to every parquet file,
+sink-log entry and checkpoint log entry, which doubles the files on
+every micro-batch's commit path; without a native Hadoop library each
+of those files also forks ``chmod``.  The trade: local files lose
+Hadoop's client-side CRC.  HDFS and object stores checksum on their
+own, so only ``file://`` paths change, and a table or checkpoint written
+either way stays readable and resumable by the other.  These are not
+``RUNTIME_CONFS``: the JVM reads ``fs.file.impl`` when it first creates
+its cached ``file://`` file system, so a session that already exists,
+such as one passed to ``queries()``, keeps the checksummed file system.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -46,9 +61,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # via repartition-on-key).  Only affects bucketed scans.
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
 }
-
-
-import weakref
 
 _CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
@@ -122,6 +134,13 @@ def get_spark(
         # (measured ~2s on this box).  0 = never reap.
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.worker.idleTimeoutSeconds", "0")
+        # No .crc sidecars on local paths (module docstring).  The second
+        # key covers FileContext users, such as the checkpoint manager.
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+        .config(
+            "spark.hadoop.fs.AbstractFileSystem.file.impl",
+            "org.apache.hadoop.fs.local.RawLocalFs",
+        )
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -255,10 +255,12 @@ def validate_config(spark: SparkSession, cfg: LoaderConfig, strict: bool = False
     if cfg.source == "kafka":
         if not cfg.kafka_bootstrap:
             errors.append("kafka source requires kafka_bootstrap")
-        if not cfg.topics or not all(t.strip() for t in cfg.topics.split(",")):
+        if not isinstance(cfg.topics, str) or not all(
+            t.strip() for t in cfg.topics.split(",")
+        ):
             errors.append(f"topics must be a non-empty comma list, got {cfg.topics!r}")
         if cfg.offset_reset not in ("earliest", "latest") and not (
-            cfg.offset_reset.startswith("{")
+            isinstance(cfg.offset_reset, str) and cfg.offset_reset.startswith("{")
         ):
             errors.append(
                 "offset_reset must be earliest|latest|JSON offsets map, "
@@ -281,8 +283,9 @@ def validate_config(spark: SparkSession, cfg: LoaderConfig, strict: bool = False
         )
     if cfg.timestamp_unit not in ("s", "ms", "us"):
         errors.append(f"timestamp_unit must be s|ms|us, got {cfg.timestamp_unit!r}")
-    if cfg.max_files_per_trigger is not None and cfg.max_files_per_trigger <= 0:
-        errors.append("max_files_per_trigger must be positive when set")
+    mfpt = cfg.max_files_per_trigger
+    if mfpt is not None and (type(mfpt) is not int or mfpt <= 0):
+        errors.append(f"max_files_per_trigger must be a positive int when set, got {mfpt!r}")
 
     # Resolve the actual transform plan against an empty static frame
     # with the source's exact post-_read_stream schema: catches DDL

@@ -35,3 +35,26 @@ def test_catalog_in_sync():
         and len(re.split(r"(?<!\\)\|", line.strip().strip("|"))) != 4
     ]
     assert not bad, f"malformed catalog rows: {bad[:3]}"
+
+
+def test_plans_lists_every_query_once():
+    """PLANS.md has exactly one row per registry query, none missing and
+    none stale.  The row contents (exchanges, joins, scans) are not
+    checked: they need ``python tools/plan_report.py``, which plans every
+    query (about 2 minutes), so regenerate it when a plan changes."""
+    reg = load_all()
+    path = os.path.join(REPO, "PLANS.md")
+    lines = open(path).read().splitlines()
+    start = lines.index("|---|---|---|---|---|---|") + 1
+    names = []
+    for line in lines[start:]:
+        if not line.startswith("| "):
+            break
+        names.append(line.split("|")[1].strip())
+    dupes = sorted({n for n in names if names.count(n) > 1})
+    missing = sorted(set(reg) - set(names))
+    stale = sorted(set(names) - set(reg))
+    assert not dupes and not missing and not stale, (
+        f"PLANS.md out of sync: duplicated={dupes[:5]} missing={missing[:5]} "
+        f"stale={stale[:5]} — run python tools/plan_report.py"
+    )

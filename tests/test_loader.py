@@ -133,6 +133,33 @@ def test_read_loaded_ignores_uncommitted_files(spark, loader_dirs):
     assert spark.read.parquet(hour).count() == 120
 
 
+def test_loaded_target_and_checkpoint_hold_no_crc_files(spark, loader_dirs):
+    """``get_spark`` writes local paths without Hadoop's ``.crc``
+    sidecars: none next to the parquet files, the sink log
+    (``_spark_metadata``) or the checkpoint's offset and commit logs."""
+    cfg = LoaderConfig(
+        input_path=loader_dirs["input"],
+        target_path=loader_dirs["target"],
+        checkpoint_path=loader_dirs["checkpoint"],
+    )
+    for k in range(2):  # two incremental runs
+        _write_jsonl(
+            f"{loader_dirs['input']}/run{k}.jsonl", _mk_events(1000 * k, 120, BASE_US)
+        )
+        run_loader(spark, cfg)
+
+    files = [
+        os.path.relpath(os.path.join(d, f), root)
+        for root in (cfg.target_path, cfg.checkpoint_path)
+        for d, _, names in os.walk(root)
+        for f in names
+    ]
+    for log_entry in ("_spark_metadata/1", "offsets/1", "commits/1"):
+        assert log_entry in files, files
+    assert [f for f in files if f.endswith(".crc")] == []
+    assert read_loaded(spark, cfg.target_path).count() == 240
+
+
 def test_one_file_per_hour_partition_per_batch(spark, loader_dirs):
     """The write is repartitioned on d/h: however many input tasks read
     the batch, each hour directory receives exactly one file."""
@@ -476,6 +503,29 @@ def test_validate_config_reports_every_error_at_once(spark):
 
     with _pytest.raises(ValueError, match="offset_reset"):
         validate_config(spark, cfg, strict=True)
+
+
+def test_validate_config_reports_non_string_values(spark):
+    """``LoaderConfig`` passes values of the wrong type through, so the
+    validator must report them as errors, not raise on them."""
+    from kafka_hadoop_loader_spark.streaming.loader import (
+        LoaderConfig,
+        validate_config,
+    )
+
+    cfg = LoaderConfig(
+        source="kafka",
+        topics=None,
+        offset_reset=None,
+        max_files_per_trigger="3",
+        target_path="/tmp/out",
+        checkpoint_path="/tmp/ckpt",
+    )
+    rep = validate_config(spark, cfg)
+    assert not rep["ok"]
+    joined = "\n".join(rep["errors"])
+    for needle in ("topics", "offset_reset", "max_files_per_trigger"):
+        assert needle in joined, (needle, rep["errors"])
 
 
 def test_validate_config_catches_plan_level_errors(spark, tmp_path):
